@@ -22,10 +22,14 @@ import graft.core.{GraftError, ObjectIdentifier}
   * are per-process), (b) re-syncs in-memory state from disk when the
   * version stamp moved — i.e. another writer committed since we last
   * looked, (c) applies the mutation to that fresh state, and (d) publishes
-  * version N+1 by atomic tmp-file rename. Lost updates are impossible:
-  * each commit is a read-modify-write against the latest committed state,
-  * and the version stamp makes any interleaving observable
-  * (FileBackendSpec's race test pins two writers' updates both surviving).
+  * version N+1 by atomic tmp-file rename. Atomic, each as one such commit:
+  * namespace create and drop, table declare and drop, and a namespace
+  * property update, whose describe, merge and publish all run inside the
+  * one commit against that fresh state. So concurrent writers lose no
+  * update (FileBackendSpec's race test pins two writers' declares both
+  * surviving, ConcurrentAlterSpec every key of concurrent alters). Not
+  * atomic: anything spanning two calls, such as a caller's own
+  * describe-then-update.
   *
   * READS still serve from the last-synced snapshot — a reader only
   * re-syncs on its next mutation. That matches metastore-client semantics
@@ -81,6 +85,9 @@ class FileBackend extends MemoryBackend {
     casMutate(super.createNamespace(id, properties, mode))
   override def dropNamespace(id: ObjectIdentifier, mode: DropMode): Map[String, String] =
     casMutate(super.dropNamespace(id, mode))
+  override def updateNamespaceProperties(id: ObjectIdentifier,
+      updates: Map[String, String], removals: Set[String]): Map[String, String] =
+    casMutate(super.updateNamespaceProperties(id, updates, removals))
   override def declareTable(id: ObjectIdentifier, location: Option[String],
       properties: Map[String, String], schemaJson: Option[String]): TableInfo =
     casMutate(super.declareTable(id, location, properties, schemaJson))

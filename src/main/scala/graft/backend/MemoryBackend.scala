@@ -46,6 +46,12 @@ class MemoryBackend extends MetadataBackend {
     namespaces.get(id.levels)
   }
 
+  /** One atomic merge: concurrent alters of one namespace keep every key. */
+  override def updateNamespaceProperties(id: ObjectIdentifier,
+      updates: Map[String, String], removals: Set[String]): Map[String, String] =
+    Option(namespaces.computeIfPresent(id.levels, (_, cur) => cur -- removals ++ updates))
+      .getOrElse(throw GraftError.NamespaceNotFound(id))
+
   override def namespaceExists(id: ObjectIdentifier): Boolean =
     namespaces.containsKey(id.levels)
 

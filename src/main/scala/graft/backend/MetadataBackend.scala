@@ -67,17 +67,16 @@ trait MetadataBackend {
   /** Op 7: restrict-only drop; returns final property snapshot. */
   def dropNamespace(id: ObjectIdentifier, mode: DropMode): Map[String, String]
 
-  /** In-place property update (ALTER NAMESPACE SET/UNSET). The default
-    * describe-then-overwrite is safe only for backends whose Overwrite is a
-    * plain put (memory/file); service backends MUST override with their
-    * native property-update endpoint — drop-and-recreate would fail on
-    * non-empty namespaces and can lose the namespace on a partial failure. */
+  /** In-place property update (ALTER NAMESPACE SET/UNSET); returns the
+    * properties after the update. Abstract so that every backend states its
+    * own atomicity: a describe-then-overwrite merge loses keys when two
+    * callers alter one namespace at once, and drop-and-recreate fails on
+    * non-empty namespaces. Memory and file merge atomically. Hive and Glue
+    * read, merge and write the whole map through their update RPC (last
+    * writer wins per call); Iceberg REST, Unity and Polaris send only the
+    * changed keys, so their atomicity is the server's. */
   def updateNamespaceProperties(id: ObjectIdentifier,
-      updates: Map[String, String], removals: Set[String]): Map[String, String] = {
-    val current = describeNamespace(id)
-    val next = current -- removals ++ updates
-    createNamespace(id, next, CreateMode.Overwrite)
-  }
+      updates: Map[String, String], removals: Set[String]): Map[String, String]
 
   /** Op 8: sorted Lance tables in a namespace (table_type filter applied). */
   def listTables(ns: ObjectIdentifier): Seq[ObjectIdentifier]

@@ -59,6 +59,10 @@ class GlueRestBackend extends MetadataBackend {
 
   private def root: String = conf.getOrElse("root", "/tmp/graft-warehouse")
 
+  /** The Hadoop conf for storage probes, built once per backend rather
+    * than once per describe (each build re-parses the default XML). */
+  private lazy val storageConf = new org.apache.hadoop.conf.Configuration()
+
   /** One Glue JSON-1.1 call. Retries 5xx/IO with backoff like RestClient;
     * 4xx carries the Glue `__type` for error mapping. */
   private def call(target: String, body: JObject): JValue = {
@@ -386,8 +390,7 @@ class GlueRestBackend extends MetadataBackend {
     val (props, storage) = TableUtil.splitStorageOptions(params - SchemaParam)
     TableInfo(id, location, props, storage,
       schemaJson = params.get(SchemaParam),
-      isOnlyDeclared = !TableUtil.hasStorageComponents(location,
-        new org.apache.hadoop.conf.Configuration()))
+      isOnlyDeclared = !TableUtil.hasStorageComponents(location, storageConf))
   }
 
   override def describeTable(id: ObjectIdentifier): TableInfo = {

@@ -74,6 +74,11 @@ class Hive2Backend extends MetadataBackend with AutoCloseable {
 
   private def root: String = conf.getOrElse("root", "/tmp/graft-warehouse")
 
+  /** The Hadoop conf for storage probes, built once: a `new Configuration()`
+    * per describe, declare or drop parsed the default XML resources again
+    * each time. */
+  private lazy val storageConf = new Configuration()
+
   /** Build the client Configuration lazily: URI + timeouts + fail-fast
     * retry policy + any caller-supplied `hive.*` keys. */
   private def clientConf(): Configuration = {
@@ -338,7 +343,7 @@ class Hive2Backend extends MetadataBackend with AutoCloseable {
     TableInfo(id.lowered, location, props, storageOpts,
       schemaJson = params.get(SchemaParam),
       isOnlyDeclared = probeStorage &&
-        !TableUtil.hasStorageComponents(location, new Configuration()))
+        !TableUtil.hasStorageComponents(location, storageConf))
   }
 
   /** Bulk describe: ONE `getTableObjectsByName` RPC per database instead of
@@ -427,7 +432,7 @@ class Hive2Backend extends MetadataBackend with AutoCloseable {
       // parent dir and keep the authoritative path in LocationParam
       val sdLoc = try {
         val p = new org.apache.hadoop.fs.Path(loc)
-        val fs = p.getFileSystem(new Configuration())
+        val fs = p.getFileSystem(storageConf)
         if (fs.exists(p) && fs.getFileStatus(p).isFile) p.getParent.toString else loc
       } catch { case _: Exception => loc }
       val sd = new StorageDescriptor()

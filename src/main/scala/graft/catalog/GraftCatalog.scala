@@ -34,6 +34,13 @@ import graft.schema.JsonArrowSchema
   * All catalog RPCs run on the driver (entry point A/B, SURVEY.md §3);
   * executors receive only serialized scan locations, which is why no
   * reference-style pickling dance (`glue.py:522-532`) exists here.
+  *
+  * Every [[GraftTable]] this catalog loads resolves its schema through the
+  * catalog's one [[TableSnapshotCache]], once per snapshot of the
+  * location's files. Has-data questions (`isOnlyDeclared`, bulk-probe
+  * misses, `routablePath`, scans) take the same walk up to the first data
+  * file. Declares, drops, purges and committed writes through this catalog
+  * evict the location's entry along with the probe and describe caches.
   */
 class GraftCatalog extends TableCatalog with SupportsNamespaces
     with ProcedureCatalog {
@@ -43,6 +50,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   private var conf: Map[String, String] = Map.empty
 
   private def spark: SparkSession = SparkSession.active
+
+  private[graft] val snapshots = new TableSnapshotCache()
 
   override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = {
     catalogName = name
@@ -153,8 +162,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   override def loadTable(ident: Identifier): Table = mapped {
     val info = backend.describeTable(oid(ident))
-    new GraftTable(ident, info, info.schemaJson.map(JsonArrowSchema.fromJson), spark,
-      onCommit = () => invalidateCached(info.id, info.location))
+    new GraftTable(ident, info, info.schemaJson.map(snapshots.declared), spark,
+      snapshots, onCommit = () => invalidateCached(info.id, info.location))
   }
 
   override def createTable(ident: Identifier, schema: StructType,
@@ -188,7 +197,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val info = backend.declareTable(oid(ident), location, cleaned, schemaJson)
     invalidateCached(info.id, info.location)
     new GraftTable(ident, info, schemaJson.map(_ => schema), spark,
-      onCommit = () => invalidateCached(info.id, info.location))
+      snapshots, onCommit = () => invalidateCached(info.id, info.location))
   }
 
   override def alterTable(ident: Identifier, changes: TableChange*): Table =
@@ -267,6 +276,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   private def invalidateCached(id: ObjectIdentifier, location: String): Unit = {
     describeCache.remove(cacheKey(id))
     probeCache.remove(location)
+    snapshots.evict(location)
   }
 
   /** Exact, unambiguous cache key: levels joined on a separator that

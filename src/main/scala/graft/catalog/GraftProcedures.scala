@@ -293,16 +293,7 @@ object GraftProcedures {
       val loc = tableLocation(tableName)
       val p = new org.apache.hadoop.fs.Path(loc)
       val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      def dataFiles(): Seq[org.apache.hadoop.fs.FileStatus] = {
-        val it = fs.listFiles(p, true)
-        val buf = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
-        while (it.hasNext) {
-          val f = it.next()
-          val n = f.getPath.getName
-          if (f.isFile && !n.startsWith("_") && !n.startsWith(".")) buf += f
-        }
-        buf.result()
-      }
+      def dataFiles() = graft.core.TableSnapshot.dataFiles(fs, p)
       val before = dataFiles()
       val bytes = before.map(_.getLen).sum
       val nParts = math.max(1,

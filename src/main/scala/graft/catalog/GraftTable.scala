@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.backend.TableInfo
-import graft.core.{GraftError, TableUtil}
+import graft.core.{GraftError, TableSnapshot, TableUtil}
 import graft.ops.ScalarIndex
 
 /** DSv2 table for a catalog-registered graft table (SURVEY.md §7.1 module 5).
@@ -31,12 +31,20 @@ import graft.ops.ScalarIndex
   * A *declared* table (metadata exists, no storage yet —
   * `LanceTableUtil.isOnlyDeclared:44-46`) scans as an empty batch of its
   * declared schema and materializes on first write.
+  *
+  * Every `schema()`, `routablePath` and scan re-walks the location, so a
+  * first write or any out-of-band change is seen without a refresh. A
+  * materialized table's schema comes from the catalog's
+  * [[TableSnapshotCache]]: `ParquetTable(...).schema` once per snapshot of
+  * the files, then shared, so a load builds no Parquet file index. Writes
+  * through this table evict the entry via `onCommit`.
   */
 class GraftTable(
     ident: Identifier,
     info: TableInfo,
     declaredSchema: Option[StructType],
     spark: SparkSession,
+    snapshots: TableSnapshotCache,
     onCommit: () => Unit = () => ())
   extends Table with SupportsRead with SupportsWrite
   with SupportsRowLevelOperations {
@@ -44,11 +52,11 @@ class GraftTable(
   private def scanOptions: CaseInsensitiveStringMap =
     new CaseInsensitiveStringMap(info.storageOptions.asJava)
 
-  /** Files present at the location right now (re-checked per call so a first
-    * write flips a declared table to materialized without a catalog refresh). */
+  private def hadoopConf = spark.sessionState.newHadoopConfWithOptions(info.storageOptions)
+
+  /** Data files present at the location right now. */
   private def materialized: Boolean =
-    TableUtil.hasStorageComponents(info.location,
-      spark.sessionState.newHadoopConfWithOptions(info.storageOptions))
+    TableUtil.hasStorageComponents(info.location, hadoopConf)
 
   /** An ANN-index entry ([[graft.ops.AnnIndex]]) is a CAPABILITY POINTER —
     * its location holds a multi-dataset layout (centroids/ + postings/
@@ -89,8 +97,11 @@ class GraftTable(
     if (isIndexPointer || !materialized) None else Some(info.location)
 
   override def schema(): StructType =
-    if (materialized && !isIndexPointer) delegate.schema
-    else declaredSchema.getOrElse(new StructType())
+    (if (isIndexPointer) None
+     else snapshots.schema(info.location, hadoopConf, declaredSchema)(
+       ParquetTable(ident.toString, spark, scanOptions, Seq(info.location),
+         declaredSchema, classOf[ParquetFileFormat]).schema))
+      .orElse(declaredSchema).getOrElse(new StructType())
 
   override def capabilities(): util.Set[TableCapability] = {
     val caps = util.EnumSet.of(
@@ -365,16 +376,7 @@ object GraftTable {
           val fs = p.getFileSystem(hconf())
           val preexisting: Seq[Path] =
             if (!fs.exists(p)) Nil
-            else {
-              val it = fs.listFiles(p, true)
-              val buf = Seq.newBuilder[Path]
-              while (it.hasNext) {
-                val f = it.next()
-                val n = f.getPath.getName
-                if (f.isFile && !n.startsWith("_") && !n.startsWith(".")) buf += f.getPath
-              }
-              buf.result()
-            }
+            else TableSnapshot.dataFiles(fs, p).map(_.getPath)
           notifying(inner.toBatch, beforeCommit = () => {
             val fs2 = new Path(location).getFileSystem(hconf())
             preexisting.foreach(f => try fs2.delete(f, false) catch { case _: Exception => () })
@@ -532,17 +534,7 @@ object GraftTable {
       val fs = p.getFileSystem(
         spark.sessionState.newHadoopConfWithOptions(info.storageOptions))
       if (!fs.exists(p)) Nil
-      else {
-        val it = fs.listFiles(p, true)
-        val buf = Seq.newBuilder[String]
-        while (it.hasNext) {
-          val f = it.next()
-          val n = f.getPath.getName
-          if (f.isFile && !n.startsWith("_") && !n.startsWith("."))
-            buf += f.getPath.toUri.toString
-        }
-        buf.result()
-      }
+      else TableSnapshot.dataFiles(fs, p).map(_.getPath.toUri.toString)
     }
 
     /** Candidate files from a FRESH index route's filestats, when one of

@@ -55,25 +55,16 @@ object TableUtil {
 
   /** Storage-existence probe: does the location hold any data files?
     * Equivalent of the reference's `Dataset.open(location)` try/catch
-    * (`LanceTableUtil.hasStorageComponents:48-60`) — but a cheap FS listing
-    * instead of a full dataset open, because at many-table scale the
-    * open-per-table pattern is the reference's documented N+1 hazard
-    * (SURVEY.md §4). Swallows failures → false, like the reference.
+    * (`LanceTableUtil.hasStorageComponents:48-60`), answered by a
+    * [[TableSnapshot.hasData]] walk (one `listStatus` per directory, up to
+    * the first data file) instead of a dataset open. Still an FS round
+    * trip per directory, not free: the bulk listing caches and fans it out.
+    * Swallows failures → false, like the reference.
     */
   def hasStorageComponents(location: String, hadoopConf: Configuration): Boolean =
     try {
       val p = new Path(location)
-      val fs = p.getFileSystem(hadoopConf)
-      fs.exists(p) && {
-        val it = fs.listFiles(p, true)
-        var found = false
-        while (!found && it.hasNext) {
-          val f = it.next()
-          val n = f.getPath.getName
-          if (f.isFile && !n.startsWith("_") && !n.startsWith(".")) found = true
-        }
-        found
-      }
+      TableSnapshot.hasData(p.getFileSystem(hadoopConf), p)
     } catch { case _: Exception => false }
 
   /** Offset-encoded client-side pagination (`hive2/PageUtil.java:21-51`):

@@ -134,17 +134,8 @@ object IndexFs {
     else {
       val st = fs.getFileStatus(p)
       if (!st.isDirectory) Seq(st.getPath.toUri.toString)
-      else {
-        val it = fs.listFiles(p, true)
-        val buf = Seq.newBuilder[String]
-        while (it.hasNext) {
-          val f = it.next()
-          val n = f.getPath.getName
-          if (f.isFile && !n.startsWith("_") && !n.startsWith("."))
-            buf += f.getPath.toUri.toString
-        }
-        buf.result()
-      }
+      else graft.core.TableSnapshot.dataFiles(fs, p)
+        .map(_.getPath.toUri.toString)
     }
   }
 

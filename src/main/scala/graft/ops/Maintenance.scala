@@ -15,11 +15,15 @@ import org.apache.spark.sql.functions._
   */
 object Maintenance {
 
-  /** Data file = not a metadata sidecar: excludes _SUCCESS/_metadata,
+  /** Data files = not metadata sidecars: excludes _SUCCESS/_metadata,
     * hidden dotfiles, and local-FS .crc checksums — the same set for byte
     * and count accounting so the two always describe the same files. */
-  private def isDataFile(name: String): Boolean =
-    !name.startsWith("_") && !name.startsWith(".") && !name.endsWith(".crc")
+  private def dataFiles(spark: SparkSession, dir: String) = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Nil
+    else graft.core.TableSnapshot.dataFiles(fs, p).filterNot(_.getPath.getName.endsWith(".crc"))
+  }
 
   /** True when `maybeAncestor` is a path prefix of `p` (qualified paths). */
   private def isAncestor(maybeAncestor: Path, p: Path): Boolean = {
@@ -33,36 +37,12 @@ object Maintenance {
 
   /** Total bytes of data files under a table directory (driver-side
     * listing — metadata only, never reads data). */
-  def dataBytes(spark: SparkSession, dir: String): Long = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0L
-    else {
-      val it = fs.listFiles(p, true)
-      var total = 0L
-      while (it.hasNext) {
-        val f = it.next()
-        if (isDataFile(f.getPath.getName)) total += f.getLen
-      }
-      total
-    }
-  }
+  def dataBytes(spark: SparkSession, dir: String): Long =
+    dataFiles(spark, dir).map(_.getLen).sum
 
   /** Number of data files under a table directory. */
-  def dataFileCount(spark: SparkSession, dir: String): Int = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0
-    else {
-      val it = fs.listFiles(p, true)
-      var n = 0
-      while (it.hasNext) {
-        val f = it.next()
-        if (isDataFile(f.getPath.getName)) n += 1
-      }
-      n
-    }
-  }
+  def dataFileCount(spark: SparkSession, dir: String): Int =
+    dataFiles(spark, dir).size
 
   /** Rewrite the parquet table at `srcDir` into `destDir` with files of
     * roughly `targetFileBytes`, clustered on `sortCols` (range partition +
