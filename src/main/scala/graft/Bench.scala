@@ -48,25 +48,27 @@ object Bench {
     def qnum(n: String): Int =
       "q(\\d+)".r.findFirstMatchIn(n).map(_.group(1).toInt).getOrElse(0)
 
+    // The exception of a failed run is kept for the JSON line and printed
+    // only after the clock stops, so reporting it costs no timed time.
     def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Boolean, Double) = {
+        : (Option[Throwable], Double) = {
       val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).queryExecution.toRdd.count(); true }
-        catch {
-          case e: OutOfMemoryError =>
-            // local[32] runbook (BASELINE.md r14 postmortem): the 100×
-            // sweep's sketch builds want a 48g driver heap from the
-            // start — per-query plans are linear; this is JVM sizing
-            System.err.println(s"[bench] $name: $e\n" +
-              "[bench] DRIVER OOM — single-JVM local mode holds " +
-              "executors AND driver in one heap; re-run with " +
-              "SPARK_DRIVER_MEM=48g (see README 'Scale sweeps')")
-            false
-          case e: Throwable =>
-            System.err.println(s"[bench] $name: $e"); false
-        }
-      (ok, (System.nanoTime() - t0) / 1e9)
+      val err =
+        try { fn(spark, sfDir).queryExecution.toRdd.count(); None }
+        catch { case e: Throwable => Some(e) }
+      val sec = (System.nanoTime() - t0) / 1e9
+      err.foreach {
+        case e: OutOfMemoryError =>
+          // local[32] runbook (BASELINE.md r14 postmortem): the 100×
+          // sweep's sketch builds want a 48g driver heap from the
+          // start — per-query plans are linear; this is JVM sizing
+          System.err.println(s"[bench] $name: $e\n" +
+            "[bench] DRIVER OOM — single-JVM local mode holds " +
+            "executors AND driver in one heap; re-run with " +
+            "SPARK_DRIVER_MEM=48g (see README 'Scale sweeps')")
+        case e => System.err.println(s"[bench] $name: $e")
+      }
+      (err, sec)
     }
 
     // Host-noise instrumentation: a fixed q01-shape control query runs
@@ -99,25 +101,38 @@ object Bench {
       // A query that threw must not report its time-to-exception as a
       // (possibly fastest) run: any failed run poisons the query to the -1
       // sentinel so failure is visible in the JSON, not only on stderr.
-      val agg = if (runs.forall(_._1)) runs.map(_._2).min else -1.0
-      (name, agg, runs.map(_._2))
+      val agg = if (runs.forall(_._1.isEmpty)) runs.map(_._2).min else -1.0
+      (name, agg, runs.map(_._2), runs.flatMap(_._1).headOption)
     }
     runControl("end")
 
     def f(v: Double): String = "%.4f".formatLocal(java.util.Locale.ROOT, v)
     val byName = results.map(r => r._1 -> r._2).toMap
-    val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + f(v) }
+    val qs = results.map { case (k, v, _, _) => s"\"" + k + "\":" + f(v) }
       .mkString("{", ",", "}")
-    val runsJson = results.map { case (k, _, rs) =>
+    val runsJson = results.map { case (k, _, rs, _) =>
       s"\"" + k + "\":[" + rs.map(f).mkString(",") + "]"
     }.mkString("{", ",", "}")
     val controlJson = control.result().map { case (after, sec) =>
       s"""{"after":"$after","sec":${f(sec)}}"""
     }.mkString("[", ",", "]")
     val failed = byName.filter(_._2 < 0).keys.toSeq.sorted
-    val failedJson =
+    // each failed query's first exception: class and (clipped) message
+    def jsonStr(v: String): String = v.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => "\\u%04x".format(c.toInt)
+      case c => c.toString
+    }.mkString("\"", "", "\"")
+    val errorsJson = results.collect { case (k, _, _, Some(e)) =>
+      val msg = Option(e.getMessage).getOrElse("").take(300)
+      s"${jsonStr(k)}:{\"class\":${jsonStr(e.getClass.getName)}," +
+        s"\"message\":${jsonStr(msg)}}"
+    }.mkString(""","errors":{""", ",", "}")
+    val failures =
       if (failed.isEmpty) ""
-      else failed.map("\"" + _ + "\"").mkString(""","failed":[""", ",", "]")
+      else failed.map("\"" + _ + "\"").mkString(""","failed":[""", ",", "]") +
+        errorsJson
     val total = byName.values.filter(_ >= 0).sum
     // a filtered run is labeled so it can't be mistaken for (or overwrite)
     // a full benchmark result
@@ -128,7 +143,7 @@ object Bench {
       (if (exclude.isEmpty) ""
        else exclude.toSeq.sorted.map("\"" + _ + "\"")
          .mkString(""","exclude":[""", ",", "]"))
-    val line = s"""{"metric":"total","value":${f(total)},"unit":"sec","runs_per_query":$runsPer,"agg":"min","control_query":"$controlName","control":$controlJson$onlyJson$failedJson,"queries":$qs,"runs":$runsJson,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${f(total)},"unit":"sec","runs_per_query":$runsPer,"agg":"min","control_query":"$controlName","control":$controlJson$onlyJson$failures,"queries":$qs,"runs":$runsJson,"sf":"$sfDir"}"""
     println(line)
     // The driver's BENCH_r*.json capture keeps only a TAIL of stdout, so
     // the full line above loses its head at ~176 queries and the round's
@@ -138,9 +153,9 @@ object Bench {
     // something. The complete per-query map still lands in the full-map
     // artifact below.
     val slow10 = results.filter(_._2 >= 0).sortBy(-_._2).take(10)
-      .map { case (k, v, _) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
+      .map { case (k, v, _, _) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
     val ctrl = control.result().map(_._2)
-    val compact = s"""{"metric":"total","value":${f(total)},"unit":"sec","n_queries":${results.size},"runs_per_query":$runsPer,"agg":"min","queries_are":"slowest10","control_min":${f(ctrl.min)},"control_max":${f(ctrl.max)}$onlyJson$failedJson,"queries":$slow10,"sf":"$sfDir"}"""
+    val compact = s"""{"metric":"total","value":${f(total)},"unit":"sec","n_queries":${results.size},"runs_per_query":$runsPer,"agg":"min","queries_are":"slowest10","control_min":${f(ctrl.min)},"control_max":${f(ctrl.max)}$onlyJson$failures,"queries":$slow10,"sf":"$sfDir"}"""
     // The driver's BENCH_r*.json capture truncates the stdout tail (round 6
     // kept 61 of 121 queries), so a FULL run also persists the complete
     // per-query map itself — round-over-round comparison needs every query,

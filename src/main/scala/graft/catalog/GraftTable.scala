@@ -129,7 +129,7 @@ class GraftTable(
     if (isIndexPointer)
       throw GraftError.Unsupported(
         s"direct scan of ANN index table ${ident.toString} " +
-          "(search through graft.ops.AnnIndex.searchIvf/searchIvfPq)")
+          "(search through graft.ops.AnnIndex.search)")
     else if (materialized) {
       val merged = new util.HashMap[String, String](options)
       scanOptions.forEach((k, v) => merged.putIfAbsent(k, v))
@@ -140,7 +140,7 @@ class GraftTable(
     if (isIndexPointer)
       throw GraftError.Unsupported(
         s"direct write to ANN index table ${ident.toString} " +
-          "(rebuild through graft.ops.AnnIndex.ensureIvf/ensureIvfPq)")
+          "(rebuild through graft.ops.AnnIndex.ensureIvf/ensureIvfPq/ensureIvfSq)")
     else if (partitionColumns.nonEmpty)
       new GraftTable.PartitionedV1WriteBuilder(info.location,
         partitionColumns,

@@ -168,19 +168,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           // self-exclusion (vec_id <> qid) keeps every corpus vector
           // eligible — an external query vector has no "self"
           val queries = Seq((-1L, qvec)).toDF("qid", "qvec")
-          val man = graft.ops.AnnIndex.readManifest(loc).getOrElse(
-            throw new IllegalStateException(s"no index at $loc"))
-          val res = man.indexType match {
-            case "ivf" => graft.ops.AnnIndex.searchIvf(
-              spark, loc, queries, "qid", "qvec", k, nprobe)
-            case "ivf_pq" => graft.ops.AnnIndex.searchIvfPq(
-              spark, loc, queries, "qid", "qvec", k, nprobe)
-            case "ivf_sq" => graft.ops.AnnIndex.searchIvfSq(
-              spark, loc, queries, "qid", "qvec", k, nprobe)
-            case t => throw new IllegalArgumentException(
-              s"graft_ann_search: $loc holds a '$t' index, not a vector one")
-          }
-          res.select(col("rank"), col("vec_id"), col("score"))
+          graft.ops.AnnIndex.search(spark, loc, queries, "qid", "qvec", k, nprobe)
+            .select(col("rank"), col("vec_id"), col("score"))
             .queryExecution.analyzed
         }))
 

@@ -2,7 +2,7 @@ package graft.ops
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -52,8 +52,24 @@ import org.apache.spark.sql.functions._
   *
   * Staleness: the manifest records a fingerprint of the SOURCE parquet
   * (file names + sizes — a driver-side stat, no data scan). [[ensureIvf]] /
-  * [[ensureIvfPq]] rebuild only when the manifest is absent or the
-  * fingerprint changed.
+  * [[ensureIvfPq]] / [[ensureIvfSq]] rebuild only when the manifest is
+  * absent or the fingerprint changed.
+  *
+  * Tiers: IVF-flat (`ivf`), IVF-PQ (`ivf_pq`) and IVF-SQ8 (`ivf_sq`)
+  * share the centroid/postings layout and differ only in the private
+  * `Tier` value — `Flat`, `Pq(m, codebook)` or `Sq8(lo, scale)`. Build
+  * takes it from the caller's training artifact; search and [[append]]
+  * rebuild it from the manifest and the persisted model directory
+  * (`codebook/`, `sq/`). It supplies the two steps that differ: the
+  * `codes` column build and append add to the postings, and the
+  * approximate candidate scorer (none for flat, ADC lookups for PQ,
+  * decode + cosine for SQ8). Everything else exists once: one build body,
+  * one [[append]], and one [[search]] pipeline — read the manifest; pick
+  * the arm (a selective `allowed` id set takes the exact pre-filter over
+  * the live postings, otherwise probe and read the live pruned postings,
+  * semi-joined by `allowed` when given); apply the tier's scorer; finish
+  * with one exact top-k. [[searchIvf]] / [[searchIvfPq]] /
+  * [[searchIvfSq]] are the same pipeline for callers that name the tier.
   *
   * Determinism: assignment, encoding, ADC, and rerank reuse the exact
   * operators of the in-query twins (max_by with ties to the lowest cid,
@@ -234,32 +250,9 @@ object AnnIndex {
   def ensureIvf(corpus: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, cidCol: String, cvecCol: String,
       location: String, sourcePath: String,
-      fingerprintOverride: Option[String] = None): Boolean = {
-    val fp = fingerprintOverride.getOrElse(sourceFingerprint(sourcePath))
-    readManifest(location) match {
-      // sourcePath.nonEmpty is a LAYOUT-GENERATION gate (the bm25pos
-      // device): pre-source-binding manifests rebuild once so every
-      // live index records where its corpus lives
-      case Some(m) if m.fingerprint == fp && m.indexType == "ivf" &&
-          m.sourcePath.nonEmpty => false
-      case _ =>
-        // stale manifest OR a manifest-less residue (crashed build):
-        // clear the location so the fresh publish can't collide with it
-        deleteRecursively(location)
-        val cells = centroids.select(col(cidCol).as("cid"), col(cvecCol).as("__c"))
-        val nlist = cells.count().toInt
-        buildAndPublish(location,
-          Manifest("ivf", "cosine", nlist, 0, fp, sourcePath = sourcePath,
-            sourceIdCol = idCol, sourceKeyCol = vecCol)) { staging =>
-          cells.select(col("cid"), col("__c").as("cvec"))
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$staging/centroids")
-          assign(corpus, idCol, vecCol, cells)
-            .write.mode("overwrite").partitionBy("cid")
-            .parquet(s"$staging/postings")
-        }
-    }
-  }
+      fingerprintOverride: Option[String] = None): Boolean =
+    ensure("ivf", corpus, idCol, vecCol, centroids, cidCol, cvecCol, None,
+      location, sourcePath, fingerprintOverride)(Flat)
 
   /** Build (or reuse) an IVF-PQ index: cells prune WHICH vectors are
     * scored, per-vector PQ codes (persisted alongside) prune WHAT is read
@@ -269,34 +262,10 @@ object AnnIndex {
       centroids: DataFrame, cidCol: String, cvecCol: String,
       codebook: DataFrame, m: Int,
       location: String, sourcePath: String,
-      fingerprintOverride: Option[String] = None): Boolean = {
-    val fp = fingerprintOverride.getOrElse(sourceFingerprint(sourcePath))
-    readManifest(location) match {
-      case Some(man) if man.fingerprint == fp &&
-          man.indexType == "ivf_pq" && man.sourcePath.nonEmpty =>
-        false
-      case _ =>
-        deleteRecursively(location)
-        val cells = centroids.select(col(cidCol).as("cid"), col(cvecCol).as("__c"))
-        val nlist = cells.count().toInt
-        buildAndPublish(location,
-          Manifest("ivf_pq", "cosine", nlist, m, fp, sourcePath = sourcePath,
-            sourceIdCol = idCol, sourceKeyCol = vecCol)) { staging =>
-          cells.select(col("cid"), col("__c").as("cvec"))
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$staging/centroids")
-          codebook.coalesce(1)
-            .write.mode("overwrite").parquet(s"$staging/codebook")
-          val codes = ProductQuantization
-            .encode(corpus, idCol, vecCol, codebook, m)
-            .select(col(idCol).as("vec_id"), col("codes"))
-          assign(corpus, idCol, vecCol, cells)
-            .join(codes, Seq("vec_id"))
-            .write.mode("overwrite").partitionBy("cid")
-            .parquet(s"$staging/postings")
-        }
-    }
-  }
+      fingerprintOverride: Option[String] = None): Boolean =
+    ensure("ivf_pq", corpus, idCol, vecCol, centroids, cidCol, cvecCol,
+      Some("codebook" -> codebook), location, sourcePath,
+      fingerprintOverride)(Pq(m, codebook))
 
   /** Build (or reuse) an IVF-SQ8 index: cells prune WHICH vectors are
     * scored, per-dimension uint8 codes ([[ScalarQuant]], 4× compression)
@@ -315,105 +284,122 @@ object AnnIndex {
       ranges: DataFrame,
       location: String, sourcePath: String,
       fingerprintOverride: Option[String] = None): Boolean = {
+    val model = ranges.select(col("dim"), col("lo"), col("hi"))
+    ensure("ivf_sq", corpus, idCol, vecCol, centroids, cidCol, cvecCol,
+      Some("sq" -> model), location, sourcePath, fingerprintOverride) {
+      val (lo, scale) = ScalarQuant.collectModel(model)
+      Sq8(lo, scale)
+    }
+  }
+
+  /** The one build body behind the three `ensureIvf*` entry points. The
+    * tier is evaluated only when a build runs (SQ8's costs a model
+    * collect); `model` is the tier's training artifact, persisted under
+    * its subdirectory so searches and appends can rebuild the tier. */
+  private def ensure(indexType: String, corpus: DataFrame, idCol: String,
+      vecCol: String, centroids: DataFrame, cidCol: String, cvecCol: String,
+      model: Option[(String, DataFrame)], location: String,
+      sourcePath: String, fingerprintOverride: Option[String])
+      (tier: => Tier): Boolean = {
     val fp = fingerprintOverride.getOrElse(sourceFingerprint(sourcePath))
     readManifest(location) match {
+      // sourcePath.nonEmpty is a LAYOUT-GENERATION gate (the bm25pos
+      // device): pre-source-binding manifests rebuild once so every
+      // live index records where its corpus lives
       case Some(man) if man.fingerprint == fp &&
-          man.indexType == "ivf_sq" && man.sourcePath.nonEmpty =>
-        false
+          man.indexType == indexType && man.sourcePath.nonEmpty => false
       case _ =>
+        // stale manifest OR a manifest-less residue (crashed build):
+        // clear the location so the fresh publish can't collide with it
         deleteRecursively(location)
         val cells = centroids.select(col(cidCol).as("cid"), col(cvecCol).as("__c"))
         val nlist = cells.count().toInt
-        val model = ranges.select(col("dim"), col("lo"), col("hi"))
-        val (loArr, scaleArr) = ScalarQuant.collectModel(model)
+        val t = tier
+        val m = t match { case Pq(m, _) => m; case _ => 0 }
         buildAndPublish(location,
-          Manifest("ivf_sq", "cosine", nlist, 0, fp, sourcePath = sourcePath,
+          Manifest(indexType, "cosine", nlist, m, fp, sourcePath = sourcePath,
             sourceIdCol = idCol, sourceKeyCol = vecCol)) { staging =>
           cells.select(col("cid"), col("__c").as("cvec"))
             .coalesce(1)
             .write.mode("overwrite").parquet(s"$staging/centroids")
-          model.coalesce(1)
-            .write.mode("overwrite").parquet(s"$staging/sq")
-          assign(corpus, idCol, vecCol, cells)
-            .withColumn("codes",
-              ScalarQuant.encode(col("embedding"), loArr, scaleArr))
+          model.foreach { case (dir, frame) =>
+            frame.coalesce(1).write.mode("overwrite").parquet(s"$staging/$dir")
+          }
+          withCodes(t, corpus, idCol, vecCol, assign(corpus, idCol, vecCol, cells))
             .write.mode("overwrite").partitionBy("cid")
             .parquet(s"$staging/postings")
         }
     }
   }
 
+  // ---- compression tier -----------------------------------------------
+
+  /** What differs between the IVF-family indexes: how a posting's `codes`
+    * are made and how probed postings are approximately scored. IVF-flat
+    * stores and scores the full vectors; PQ stores per-subspace codebook
+    * ids (m, codebook); SQ8 stores per-dimension uint8 codes (lo, scale). */
+  private sealed trait Tier
+  private case object Flat extends Tier
+  private final case class Pq(m: Int, codebook: DataFrame) extends Tier
+  private final case class Sq8(lo: Array[Double], scale: Array[Double])
+    extends Tier
+
+  /** The tier of a built index, from its manifest and the model it
+    * persisted (`codebook/` for PQ, `sq/` for SQ8). */
+  private def tierOf(spark: SparkSession, location: String,
+      man: Manifest): Tier = man.indexType match {
+    case "ivf" => Flat
+    case "ivf_pq" => Pq(man.m, spark.read.parquet(s"$location/codebook"))
+    case "ivf_sq" =>
+      val (lo, scale) =
+        ScalarQuant.collectModel(spark.read.parquet(s"$location/sq"))
+      Sq8(lo, scale)
+    case t => throw new IllegalArgumentException(
+      s"$location holds a '$t' index, not an IVF-family one")
+  }
+
+  /** Assigned postings (vec_id, embedding, cid) plus the tier's `codes`
+    * column, encoded from `corpus` against the tier's frozen model. */
+  private def withCodes(tier: Tier, corpus: DataFrame, idCol: String,
+      vecCol: String, assigned: DataFrame): DataFrame = tier match {
+    case Flat => assigned
+    case Pq(m, codebook) =>
+      assigned.join(ProductQuantization.encode(corpus, idCol, vecCol, codebook, m)
+        .select(col(idCol).as("vec_id"), col("codes")), Seq("vec_id"))
+    case Sq8(lo, scale) =>
+      assigned.withColumn("codes", ScalarQuant.encode(col("embedding"), lo, scale))
+  }
+
   // ---- incremental append ---------------------------------------------
 
-  /** Incrementally ADD vectors to an existing IVF index: assign ONLY the
-    * delta against the index's FROZEN centroids and append its postings to
-    * the partitioned layout — the nightly-ingest path. A 100 TB index
-    * re-processes just the day's delta, not the corpus; the trade is the
-    * standard IVF one (centroids don't move on append, so cell balance
-    * drifts with the data — the rebuild cadence is the owner's policy,
-    * observable via the fingerprint).
+  /** Incrementally ADD vectors to an existing IVF-family index: assign
+    * ONLY the delta against the index's FROZEN centroids, encode it
+    * against the index's frozen codebook or SQ8 ranges (its tier, read
+    * from the manifest), and append its postings to the partitioned
+    * layout — the nightly-ingest path. A 100 TB index re-processes just
+    * the day's delta, not the corpus; the trade is the standard IVF one
+    * (centroids and quantizers don't move on append, so cell balance
+    * drifts and out-of-range SQ8 values clamp to the code edges — the
+    * rebuild cadence is the owner's policy, observable via the
+    * fingerprint).
     *
     * Crash discipline: the build-then-append flow stamps the manifest
-    * with a `partial:` marker at build and only [[appendIvf]] re-stamps
+    * with a `partial:` marker at build and only [[append]] re-stamps
     * the final `newFingerprint` AFTER its postings commit — a crash
     * between the phases reads as stale and rebuilds, never as a silently
     * half-covered index. The append itself is file-granular (parquet
     * append): a concurrent reader sees either the old or the new file
     * set of a partition, the same read-committed class as any parquet
     * append. */
-  def appendIvf(delta: DataFrame, idCol: String, vecCol: String,
+  def append(delta: DataFrame, idCol: String, vecCol: String,
       location: String, newFingerprint: String): Unit = {
     val man = readManifest(location).getOrElse(
       throw new IllegalStateException(s"no index at $location"))
-    require(man.indexType == "ivf", s"appendIvf on ${man.indexType} index")
     val spark = delta.sparkSession
+    val tier = tierOf(spark, location, man)
     val cells = spark.read.parquet(s"$location/centroids")
       .select(col("cid"), col("cvec").as("__c"))
-    assign(delta, idCol, vecCol, cells)
-      .write.mode("append").partitionBy("cid")
-      .parquet(s"$location/postings")
-    writeManifest(location, man.copy(fingerprint = newFingerprint))
-  }
-
-  /** [[appendIvf]] for an IVF-PQ index: the delta is additionally encoded
-    * against the index's frozen codebook before its postings append. */
-  def appendIvfPq(delta: DataFrame, idCol: String, vecCol: String,
-      location: String, newFingerprint: String): Unit = {
-    val man = readManifest(location).getOrElse(
-      throw new IllegalStateException(s"no index at $location"))
-    require(man.indexType == "ivf_pq", s"appendIvfPq on ${man.indexType} index")
-    val spark = delta.sparkSession
-    val cells = spark.read.parquet(s"$location/centroids")
-      .select(col("cid"), col("cvec").as("__c"))
-    val codebook = spark.read.parquet(s"$location/codebook")
-    val codes = ProductQuantization
-      .encode(delta, idCol, vecCol, codebook, man.m)
-      .select(col(idCol).as("vec_id"), col("codes"))
-    assign(delta, idCol, vecCol, cells)
-      .join(codes, Seq("vec_id"))
-      .write.mode("append").partitionBy("cid")
-      .parquet(s"$location/postings")
-    writeManifest(location, man.copy(fingerprint = newFingerprint))
-  }
-
-  /** [[appendIvf]] for an IVF-SQ8 index: the delta is additionally
-    * SQ8-encoded against the index's FROZEN ranges before its postings
-    * append (out-of-range drift clamps to the code edges — the standard
-    * frozen-model trade, same as cell-balance drift; the rebuild cadence
-    * is the owner's policy). */
-  def appendIvfSq(delta: DataFrame, idCol: String, vecCol: String,
-      location: String, newFingerprint: String): Unit = {
-    val man = readManifest(location).getOrElse(
-      throw new IllegalStateException(s"no index at $location"))
-    require(man.indexType == "ivf_sq", s"appendIvfSq on ${man.indexType} index")
-    val spark = delta.sparkSession
-    val cells = spark.read.parquet(s"$location/centroids")
-      .select(col("cid"), col("cvec").as("__c"))
-    val (loArr, scaleArr) =
-      ScalarQuant.collectModel(spark.read.parquet(s"$location/sq"))
-    assign(delta, idCol, vecCol, cells)
-      .withColumn("codes",
-        ScalarQuant.encode(col("embedding"), loArr, scaleArr))
+    withCodes(tier, delta, idCol, vecCol, assign(delta, idCol, vecCol, cells))
       .write.mode("append").partitionBy("cid")
       .parquet(s"$location/postings")
     writeManifest(location, man.copy(fingerprint = newFingerprint))
@@ -474,7 +460,7 @@ object AnnIndex {
 
   // ---- compaction & observability -------------------------------------
 
-  /** Compact a fragmented index: every [[appendIvf]] lands at least one
+  /** Compact a fragmented index: every [[append]] lands at least one
     * new file per touched cell, so a daily-ingest index accumulates the
     * classic small-files tax (per-file open/footer cost dominates the
     * scan). Rewrites the postings with one file per cell partition into a
@@ -556,115 +542,6 @@ object AnnIndex {
     spark.read.parquet(s"$location/postings")
       .filter(col("cid").isin(probedCids.map(Int.box): _*))
 
-  /** Search a persisted IVF index. Plan: tiny centroid read → per-query
-    * probes (broadcast) → partition-pruned postings scan → cosine + top-k.
-    * Result shape and values are identical to [[Similarity.ivfTopK]] over
-    * the same corpus/centroids (gate q197 ≡ q117). */
-  def searchIvf(spark: SparkSession, location: String,
-      queries: DataFrame, qidCol: String, qvecCol: String,
-      k: Int = 10, nprobe: Int = 2): DataFrame = {
-    require(readManifest(location).exists(_.indexType == "ivf"),
-      s"no IVF index at $location")
-    val (probes, probedCids) = probe(spark, location, queries, qidCol, qvecCol, nprobe)
-    val wTop = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("vec_id"))
-    withoutTombstones(spark, location,
-        prunedPostings(spark, location, probedCids))
-      .join(broadcast(probes), Seq("cid"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        round(Similarity.cosine(col("__q"), col("embedding")), 6).as("score"))
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("vec_id"), col("score"))
-  }
-
-  /** Search a persisted IVF-PQ index: ADC over the probed cells' persisted
-    * codes, exact rerank against the same pruned postings (candidates can
-    * only come from probed cells, so the rerank never re-opens the full
-    * corpus). ≡ [[ProductQuantization.searchIvfPq]] (gate q198 ≡ q121). */
-  def searchIvfPq(spark: SparkSession, location: String,
-      queries: DataFrame, qidCol: String, qvecCol: String,
-      k: Int = 10, nprobe: Int = 2, rerank: Int = 50): DataFrame = {
-    val man = readManifest(location)
-    require(man.exists(_.indexType == "ivf_pq"), s"no IVF-PQ index at $location")
-    val m = man.get.m
-    val codebook = spark.read.parquet(s"$location/codebook")
-    val (probes, probedCids) = probe(spark, location, queries, qidCol, qvecCol, nprobe)
-    // the live view feeds BOTH the ADC candidates and the exact rerank —
-    // a deleted vector can neither be retrieved nor sneak back in as a
-    // rerank candidate
-    val postings = withoutTombstones(spark, location,
-      prunedPostings(spark, location, probedCids))
-
-    // per-query (s, c) → partial-L2² distance table, same as the in-query twin
-    val dim = queries.select(size(col(qvecCol))).head().getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val subDim = dim / m
-    val dtable = queries.select(col(qidCol).as("qid"),
-        explode(array((0 until m).map(s =>
-          struct(lit(s).as("s"),
-            slice(col(qvecCol), s * subDim + 1, subDim).as("qsv"))): _*)).as("__e"))
-      .select(col("qid"), col("__e.s").as("s"), col("__e.qsv").as("qsv"))
-      .join(broadcast(codebook), Seq("s"))
-      .select(col("qid"), col("s"), col("c"),
-        ProductQuantization.l2sq(col("qsv"), col("cvec")).as("partial"))
-
-    // one codegen'd m-lookup sum per (query, probed vector) row against
-    // the broadcast per-query lookup map — bit-identical to the previous
-    // posexplode → join → sum shape (ProductQuantization.adcDistance)
-    val wApprox = Window.partitionBy(col("qid"))
-      .orderBy(col("approx_l2sq"), col("vec_id"))
-    val candidates = postings.join(broadcast(probes.select(col("qid"), col("cid"))), Seq("cid"))
-      .filter(col("vec_id") =!= col("qid"))
-      .join(broadcast(ProductQuantization.dtableToMap(dtable)), Seq("qid"))
-      .select(col("qid"), col("vec_id"),
-        ProductQuantization.adcDistance(col("codes"), col("__dt"), m)
-          .as("approx_l2sq"))
-      .withColumn("__rn", row_number().over(wApprox))
-      .filter(col("__rn") <= rerank)
-      .select(col("qid"), col("vec_id"))
-
-    ProductQuantization.rerankExact(candidates,
-      postings, "vec_id", "embedding", queries, qidCol, qvecCol, k)
-  }
-
-  /** Search a persisted IVF-SQ8 index: decode the probed cells' codes
-    * back to float vectors (shuffle-free `transform` against the frozen
-    * lo/scale literal arrays — a dim-sized driver read, never a join) and
-    * score them with the SAME codegen'd cosine as a flat search; exact
-    * rerank of the top `rerank` against the full vectors in the same
-    * pruned postings. No distance table and no per-candidate explode —
-    * SQ8's search plan is IVF-flat's plan over reconstructed vectors,
-    * which is exactly why serving systems default to it. */
-  def searchIvfSq(spark: SparkSession, location: String,
-      queries: DataFrame, qidCol: String, qvecCol: String,
-      k: Int = 10, nprobe: Int = 2, rerank: Int = 50): DataFrame = {
-    require(readManifest(location).exists(_.indexType == "ivf_sq"),
-      s"no IVF-SQ index at $location")
-    val (loArr, scaleArr) =
-      ScalarQuant.collectModel(spark.read.parquet(s"$location/sq"))
-    val (probes, probedCids) = probe(spark, location, queries, qidCol, qvecCol, nprobe)
-    // the live view feeds BOTH the approximate pass and the exact rerank
-    val postings = withoutTombstones(spark, location,
-      prunedPostings(spark, location, probedCids))
-    val wApprox = Window.partitionBy(col("qid"))
-      .orderBy(col("__approx").desc, col("vec_id"))
-    val candidates = postings
-      .withColumn("__dec", ScalarQuant.decode(col("codes"), loArr, scaleArr))
-      .join(broadcast(probes), Seq("cid"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        Similarity.cosine(col("__q"), col("__dec")).as("__approx"))
-      .withColumn("__rn", row_number().over(wApprox))
-      .filter(col("__rn") <= rerank)
-      .select(col("qid"), col("vec_id"))
-    ProductQuantization.rerankExact(candidates,
-      postings, "vec_id", "embedding", queries, qidCol, qvecCol, k)
-  }
-
-  // ---- filtered search -------------------------------------------------
-
   /** True when the metadata filter passes at most `exactCap` ids — the
     * pre-filter/post-filter planning decision. The cardinality probe is
     * `limit(exactCap+1).count()`: it stops counting at the cap, so the
@@ -676,57 +553,116 @@ object AnnIndex {
     allowedIds.limit(probe).count() <= exactCap
   }
 
-  /** FILTERED vector search over a persisted IVF index: top-k among only
-    * the vectors whose ids pass a metadata predicate. The index stores no
-    * metadata — the predicate is evaluated on the BASE table (column-
-    * pruned to the id + filter columns) and arrives here as the
-    * single-column `allowed` id frame.
+  private val IvfTypes = Set("ivf", "ivf_pq", "ivf_sq")
+
+  /** Top-k search over a persisted IVF-family index of any tier, read
+    * from its manifest. Result: (qid, rank, vec_id, score) with 6-dp
+    * rounded exact cosine scores; a query never retrieves its own id.
     *
-    * Two physical plans, chosen by the filter's cardinality — the
-    * pre-filter/post-filter split every production vector store makes
-    * (the reference's query layer exposes it as a prefilter flag on
-    * vector queries; here the engine decides from the measured
-    * cardinality):
+    * Unfiltered, the plan is: tiny centroid read → per-query probes
+    * (broadcast) → partition-pruned live postings → the tier's
+    * approximate shortlist of `rerank` per query (none for IVF-flat) →
+    * exact top-k. Result shape and values are identical to the in-query
+    * twins over the same corpus/centroids: [[Similarity.ivfTopK]] for
+    * IVF-flat (gate q197 ≡ q117) and [[ProductQuantization.searchIvfPq]]
+    * for IVF-PQ (gate q198 ≡ q121). Candidates can only come from probed
+    * cells, so the rerank never re-opens the full corpus.
+    *
+    * FILTERED search: `allowed` is a single-column frame of the ids whose
+    * metadata passes a predicate. The index stores no metadata — the
+    * predicate is evaluated on the BASE table (column-pruned to the id +
+    * filter columns). Two physical plans, chosen by the filter's measured
+    * cardinality ([[takesExactPath]]) — the pre-filter/post-filter split
+    * every production vector store makes (the reference's query layer
+    * exposes it as a prefilter flag on vector queries):
     *
     *  - EXACT PRE-FILTER (selective, ≤ `exactCap` ids): the probe layer
     *    is pure overhead and would also LOSE matches that live outside
-    *    the probed cells — so bypass it: scan only the allowed vectors
-    *    (broadcast-semi-joined into the postings) and rank exactly.
-    *    Recall = 1.0 by construction, cost ∝ |allowed| × |queries|.
-    *  - IVF POST-FILTER (broad): probe nprobe cells as usual and push
-    *    the allowed-id semi-join BENEATH the distance computation, so
-    *    cosines are only ever computed for rows that can be returned.
-    *    A post-filter ABOVE the top-k (the naive shape) would instead
-    *    return fewer than k rows whenever filtered-out vectors crowd
-    *    the shortlist.
+    *    the probed cells — so bypass it and the tier: scan only the
+    *    allowed full vectors (semi-joined into the postings) and rank
+    *    exactly. Recall = 1.0 by construction, cost ∝ |allowed| ×
+    *    |queries|, and the same rows for every tier.
+    *  - IVF POST-FILTER (broad): probe as usual and push the allowed-id
+    *    semi-join BENEATH every scoring stage — the approximate shortlist
+    *    and the exact rerank — so filtered-out vectors can neither crowd
+    *    the shortlist (a post-filter above the top-k would return fewer
+    *    than k rows) nor reappear as rerank candidates (the q205/q208
+    *    two-stage discipline).
     *
     * Scale: the allowed set broadcasts when Spark's size estimate allows
     * (a semi-join never widens rows); at 100 TB with a non-selective
     * predicate it degrades to a shuffled semi-join of (id) pairs — the
     * minimum possible shuffle for the semantics. Tombstones compose: both
     * arms search the live view. */
-  def searchIvfFiltered(spark: SparkSession, location: String,
-      allowed: DataFrame, allowedIdCol: String,
+  def search(spark: SparkSession, location: String,
       queries: DataFrame, qidCol: String, qvecCol: String,
-      k: Int = 10, nprobe: Int = 2, exactCap: Long = 10000L): DataFrame = {
-    require(readManifest(location).exists(_.indexType == "ivf"),
-      s"no IVF index at $location")
-    val ids = allowed.select(col(allowedIdCol).cast("long").as("vec_id"))
-    val scoped =
-      if (takesExactPath(ids, exactCap))
-        withoutTombstones(spark, location,
+      k: Int = 10, nprobe: Int = 2, rerank: Int = 50,
+      allowed: Option[DataFrame] = None,
+      exactCap: Long = 10000L): DataFrame =
+    pipeline(IvfTypes, spark, location, queries, qidCol, qvecCol, k, nprobe,
+      rerank, allowed, exactCap)
+
+  /** [[search]] over an index that must be IVF-flat. */
+  def searchIvf(spark: SparkSession, location: String,
+      queries: DataFrame, qidCol: String, qvecCol: String,
+      k: Int = 10, nprobe: Int = 2): DataFrame =
+    pipeline(Set("ivf"), spark, location, queries, qidCol, qvecCol, k,
+      nprobe, 0, None, 0L)
+
+  /** [[search]] over an index that must be IVF-PQ. */
+  def searchIvfPq(spark: SparkSession, location: String,
+      queries: DataFrame, qidCol: String, qvecCol: String,
+      k: Int = 10, nprobe: Int = 2, rerank: Int = 50): DataFrame =
+    pipeline(Set("ivf_pq"), spark, location, queries, qidCol, qvecCol, k,
+      nprobe, rerank, None, 0L)
+
+  /** [[search]] over an index that must be IVF-SQ8. */
+  def searchIvfSq(spark: SparkSession, location: String,
+      queries: DataFrame, qidCol: String, qvecCol: String,
+      k: Int = 10, nprobe: Int = 2, rerank: Int = 50): DataFrame =
+    pipeline(Set("ivf_sq"), spark, location, queries, qidCol, qvecCol, k,
+      nprobe, rerank, None, 0L)
+
+  /** The one search pipeline ([[search]]) over an index whose type is
+    * one of `types`: arm choice, probe, the tier's approximate shortlist,
+    * exact top-k. The tier's model is read only on the probe arm — the
+    * exact arm never touches it. */
+  private def pipeline(types: Set[String], spark: SparkSession,
+      location: String, queries: DataFrame, qidCol: String, qvecCol: String,
+      k: Int, nprobe: Int, rerank: Int, allowed: Option[DataFrame],
+      exactCap: Long): DataFrame = {
+    val man = readManifest(location).filter(m => types.contains(m.indexType))
+      .getOrElse(throw new IllegalArgumentException(
+        s"no ${types.toSeq.sorted.mkString("/")} index at $location"))
+    val ids = allowed.map(a =>
+      a.select(col(a.columns.head).cast("long").as("vec_id")))
+    ids.filter(takesExactPath(_, exactCap)) match {
+      case Some(few) =>
+        exactTopK(withoutTombstones(spark, location,
             spark.read.parquet(s"$location/postings"))
-          .join(ids, Seq("vec_id"), "left_semi")
+          .join(few, Seq("vec_id"), "left_semi")
           .join(broadcast(queries.select(
-            col(qidCol).as("qid"), col(qvecCol).as("__q"))))
-      else {
+            col(qidCol).as("qid"), col(qvecCol).as("__q")))), k)
+      case None =>
+        val tier = tierOf(spark, location, man)
         val (probes, probedCids) =
           probe(spark, location, queries, qidCol, qvecCol, nprobe)
-        withoutTombstones(spark, location,
-            prunedPostings(spark, location, probedCids))
-          .join(ids, Seq("vec_id"), "left_semi")
-          .join(broadcast(probes), Seq("cid"))
-      }
+        val live = withoutTombstones(spark, location,
+          prunedPostings(spark, location, probedCids))
+        // the live (and allowed) view feeds BOTH the approximate pass and
+        // the exact rerank — a deleted or filtered-out vector can neither
+        // be retrieved nor sneak back in as a rerank candidate
+        val postings = ids.fold(live)(live.join(_, Seq("vec_id"), "left_semi"))
+        shortlist(tier, postings, probes, queries, qidCol, qvecCol, rerank)
+          .map(ProductQuantization.rerankExact(_, postings, "vec_id",
+            "embedding", queries, qidCol, qvecCol, k))
+          .getOrElse(exactTopK(postings.join(broadcast(probes), Seq("cid")), k))
+    }
+  }
+
+  /** Exact top-k over (qid, __q, vec_id, embedding) rows: 6-dp rounded
+    * cosine, ties to the lower vec_id, self-matches excluded. */
+  private def exactTopK(scoped: DataFrame, k: Int): DataFrame = {
     val wTop = Window.partitionBy(col("qid"))
       .orderBy(col("score").desc, col("vec_id"))
     scoped
@@ -738,47 +674,23 @@ object AnnIndex {
       .select(col("qid"), col("rank"), col("vec_id"), col("score"))
   }
 
-  /** [[searchIvfFiltered]] for an IVF-PQ index. The broad arm pushes the
-    * allowed-id semi-join beneath BOTH stages — ADC candidate generation
-    * and the exact rerank — because a filter applied only at rerank would
-    * let filtered-out vectors crowd the `rerank` shortlist and starve the
-    * final top-k (the same two-stage discipline as the tombstone path,
-    * q205). The selective arm bypasses quantization entirely: PQ exists
-    * to avoid scanning the corpus, and a ≤`exactCap` scan is already
-    * cheaper than the probe machinery — and exact, where ADC is lossy. */
-  def searchIvfPqFiltered(spark: SparkSession, location: String,
-      allowed: DataFrame, allowedIdCol: String,
-      queries: DataFrame, qidCol: String, qvecCol: String,
-      k: Int = 10, nprobe: Int = 2, rerank: Int = 50,
-      exactCap: Long = 10000L): DataFrame = {
-    val man = readManifest(location)
-    require(man.exists(_.indexType == "ivf_pq"), s"no IVF-PQ index at $location")
-    val ids = allowed.select(col(allowedIdCol).cast("long").as("vec_id"))
-    if (takesExactPath(ids, exactCap)) {
-      // postings carry the full vectors alongside the codes (the rerank
-      // needs them anyway) — the exact arm reads those and never decodes
-      val wTop = Window.partitionBy(col("qid"))
-        .orderBy(col("score").desc, col("vec_id"))
-      withoutTombstones(spark, location,
-          spark.read.parquet(s"$location/postings"))
-        .join(ids, Seq("vec_id"), "left_semi")
-        .join(broadcast(queries.select(
-          col(qidCol).as("qid"), col(qvecCol).as("__q"))))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          round(Similarity.cosine(col("__q"), col("embedding")), 6).as("score"))
-        .withColumn("rank", row_number().over(wTop))
-        .filter(col("rank") <= k)
-        .select(col("qid"), col("rank"), col("vec_id"), col("score"))
-    } else {
-      val m = man.get.m
-      val codebook = spark.read.parquet(s"$location/codebook")
-      val (probes, probedCids) =
-        probe(spark, location, queries, qidCol, qvecCol, nprobe)
-      val postings = withoutTombstones(spark, location,
-          prunedPostings(spark, location, probedCids))
-        .join(ids, Seq("vec_id"), "left_semi")
-
+  /** The tier's approximate scorer over the probed postings: (qid,
+    * vec_id) of the best `rerank` candidates per query, or None for
+    * IVF-flat, which scores the probed full vectors exactly.
+    *  - PQ: a per-query (s, c) → partial-L2² distance table, broadcast as
+    *    one lookup map, and one codegen'd m-lookup sum per (query,
+    *    probed vector) row ([[ProductQuantization.adcDistance]]) — the
+    *    same values as the in-query twin.
+    *  - SQ8: decode the codes back to float vectors (shuffle-free
+    *    `transform` against the frozen lo/scale literal arrays) and score
+    *    them with the SAME codegen'd cosine as a flat search — no
+    *    distance table and no per-candidate explode, which is exactly why
+    *    serving systems default to it. */
+  private def shortlist(tier: Tier, postings: DataFrame, probes: DataFrame,
+      queries: DataFrame, qidCol: String, qvecCol: String, rerank: Int)
+      : Option[DataFrame] = tier match {
+    case Flat => None
+    case Pq(m, codebook) =>
       val dim = queries.select(size(col(qvecCol))).head().getInt(0)
       require(dim % m == 0, s"dim $dim not divisible by m=$m")
       val subDim = dim / m
@@ -790,81 +702,32 @@ object AnnIndex {
         .join(broadcast(codebook), Seq("s"))
         .select(col("qid"), col("s"), col("c"),
           ProductQuantization.l2sq(col("qsv"), col("cvec")).as("partial"))
-
-      // same codegen'd ADC lookup as the unfiltered arm (adcDistance)
-      val wApprox = Window.partitionBy(col("qid"))
-        .orderBy(col("approx_l2sq"), col("vec_id"))
-      val candidates = postings
+      Some(topCandidates(postings
         .join(broadcast(probes.select(col("qid"), col("cid"))), Seq("cid"))
         .filter(col("vec_id") =!= col("qid"))
         .join(broadcast(ProductQuantization.dtableToMap(dtable)), Seq("qid"))
         .select(col("qid"), col("vec_id"),
           ProductQuantization.adcDistance(col("codes"), col("__dt"), m)
-            .as("approx_l2sq"))
-        .withColumn("__rn", row_number().over(wApprox))
-        .filter(col("__rn") <= rerank)
-        .select(col("qid"), col("vec_id"))
-
-      ProductQuantization.rerankExact(candidates,
-        postings, "vec_id", "embedding", queries, qidCol, qvecCol, k)
-    }
-  }
-
-  /** [[searchIvfFiltered]] for an IVF-SQ8 index — completing the
-    * filtered-search matrix across all three compression tiers (ivf /
-    * ivf_pq / ivf_sq). Same plan split as the PQ arm: the SELECTIVE arm
-    * bypasses quantization entirely (the postings carry full vectors for
-    * the rerank anyway — a ≤`exactCap` scan of those is cheaper than the
-    * probe machinery AND exact where the decoded scores are lossy); the
-    * BROAD arm keeps the probe and pushes the allowed-id semi-join
-    * BENEATH both stages — the decoded-approximate pass and the exact
-    * rerank — so filtered-out vectors can neither crowd the `rerank`
-    * shortlist nor reappear as rerank candidates (the q205/q208 two-stage
-    * discipline). Tombstones compose: both arms search the live view. */
-  def searchIvfSqFiltered(spark: SparkSession, location: String,
-      allowed: DataFrame, allowedIdCol: String,
-      queries: DataFrame, qidCol: String, qvecCol: String,
-      k: Int = 10, nprobe: Int = 2, rerank: Int = 50,
-      exactCap: Long = 10000L): DataFrame = {
-    require(readManifest(location).exists(_.indexType == "ivf_sq"),
-      s"no IVF-SQ index at $location")
-    val ids = allowed.select(col(allowedIdCol).cast("long").as("vec_id"))
-    if (takesExactPath(ids, exactCap)) {
-      val wTop = Window.partitionBy(col("qid"))
-        .orderBy(col("score").desc, col("vec_id"))
-      withoutTombstones(spark, location,
-          spark.read.parquet(s"$location/postings"))
-        .join(ids, Seq("vec_id"), "left_semi")
-        .join(broadcast(queries.select(
-          col(qidCol).as("qid"), col(qvecCol).as("__q"))))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          round(Similarity.cosine(col("__q"), col("embedding")), 6).as("score"))
-        .withColumn("rank", row_number().over(wTop))
-        .filter(col("rank") <= k)
-        .select(col("qid"), col("rank"), col("vec_id"), col("score"))
-    } else {
-      val (loArr, scaleArr) =
-        ScalarQuant.collectModel(spark.read.parquet(s"$location/sq"))
-      val (probes, probedCids) =
-        probe(spark, location, queries, qidCol, qvecCol, nprobe)
-      val postings = withoutTombstones(spark, location,
-          prunedPostings(spark, location, probedCids))
-        .join(ids, Seq("vec_id"), "left_semi")
-      val wApprox = Window.partitionBy(col("qid"))
-        .orderBy(col("__approx").desc, col("vec_id"))
-      val candidates = postings
-        .withColumn("__dec", ScalarQuant.decode(col("codes"), loArr, scaleArr))
+            .as("approx_l2sq")),
+        col("approx_l2sq"), rerank))
+    case Sq8(lo, scale) =>
+      Some(topCandidates(postings
+        .withColumn("__dec", ScalarQuant.decode(col("codes"), lo, scale))
         .join(broadcast(probes), Seq("cid"))
         .filter(col("vec_id") =!= col("qid"))
         .select(col("qid"), col("vec_id"),
-          Similarity.cosine(col("__q"), col("__dec")).as("__approx"))
-        .withColumn("__rn", row_number().over(wApprox))
-        .filter(col("__rn") <= rerank)
-        .select(col("qid"), col("vec_id"))
-      ProductQuantization.rerankExact(candidates,
-        postings, "vec_id", "embedding", queries, qidCol, qvecCol, k)
-    }
+          Similarity.cosine(col("__q"), col("__dec")).as("__approx")),
+        col("__approx").desc, rerank))
+  }
+
+  /** (qid, vec_id) of the `rerank` best rows per query by `byApprox`,
+    * ties to the lower vec_id. */
+  private def topCandidates(scored: DataFrame, byApprox: Column,
+      rerank: Int): DataFrame = {
+    val w = Window.partitionBy(col("qid")).orderBy(byApprox, col("vec_id"))
+    scored.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") <= rerank)
+      .select(col("qid"), col("vec_id"))
   }
 
   // ---- catalog registration ------------------------------------------
@@ -888,7 +751,7 @@ object AnnIndex {
       // inference over it would fail with conflicting directory
       // structures — and a capability-pointer table must never need to
       // scan its location just to be registered. Reads of the index go
-      // through searchIvf/searchIvfPq, which interpret the layout.
+      // through the family's search API, which interprets the layout.
       val schema = man.indexType match {
         case "ivf_pq" | "ivf_sq" =>
           "vec_id BIGINT, embedding ARRAY<FLOAT>, codes ARRAY<INT>, cid INT"
@@ -934,19 +797,6 @@ object AnnIndex {
     spark.sql(s"SHOW TBLPROPERTIES $tableName ('graft.index.location')")
       .collect().head.getString(1)
 
-  /** INVENTORY of the registered indexes in a namespace — the list_indices
-    * surface of the reference's index family: every `graft.index.*`
-    * capability-pointer table with its type/metric/width metadata, read
-    * from the catalog properties stamped at registration. Catalog
-    * enumeration is driver-side and metadata-sized (a namespace holds
-    * tables, not data) — and it is BATCHED: a GraftCatalog namespace
-    * resolves through ONE backend listing + one pooled bulk describe
-    * ([[graft.catalog.GraftCatalog.describeNamespaceTables]]), never a
-    * `SHOW TBLPROPERTIES` round trip per table (the reference's N+1
-    * anti-pattern, `Hive2Namespace.java:541-556`, which crawls against a
-    * remote HMS/Glue at thousands of tables). Non-graft catalogs fall
-    * back to the per-table path. Returns (table_name, index_type,
-    * metric, m), sorted by table name. */
   /** REBUILD an index from its manifest's SOURCE BINDING — the recovery
     * path the divergence contract points at: an index-only `deleteIds`
     * stamps `divergent` and the optimizer route declines "until a
@@ -969,7 +819,7 @@ object AnnIndex {
         man.sourceKeyCol.nonEmpty,
       s"rebuildFromSource: the index at $location predates source-binding " +
         "manifests — rebuild through its ensure API")
-    require(!Set("ivf", "ivf_pq", "ivf_sq").contains(man.indexType),
+    require(!IvfTypes.contains(man.indexType),
       s"rebuildFromSource: a '${man.indexType}' index needs its training " +
         "artifacts (centroids/codebook/ranges) — rebuild through its " +
         "ensure API")
@@ -1052,6 +902,19 @@ object AnnIndex {
     doomed
   }
 
+  /** INVENTORY of the registered indexes in a namespace — the list_indices
+    * surface of the reference's index family: every `graft.index.*`
+    * capability-pointer table with its type/metric/width metadata, read
+    * from the catalog properties stamped at registration. Catalog
+    * enumeration is driver-side and metadata-sized (a namespace holds
+    * tables, not data) — and it is BATCHED: a GraftCatalog namespace
+    * resolves through ONE backend listing + one pooled bulk describe
+    * ([[graft.catalog.GraftCatalog.describeNamespaceTables]]), never a
+    * `SHOW TBLPROPERTIES` round trip per table (the reference's N+1
+    * anti-pattern, `Hive2Namespace.java:541-556`, which crawls against a
+    * remote HMS/Glue at thousands of tables). Non-graft catalogs fall
+    * back to the per-table path. Returns (table_name, index_type,
+    * metric, m), sorted by table name. */
   def listIndexTables(spark: SparkSession, namespace: String): DataFrame = {
     val parts = namespace.split('.')
     val bulk: Option[Seq[(String, Map[String, String])]] =

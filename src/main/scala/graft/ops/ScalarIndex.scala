@@ -212,8 +212,8 @@ object ScalarIndex {
                 count(lit(1)).as("n_rows")) ++ extraAggs): _*)
           val zmRows = zmAgg.collect()
           if (keyIsLong && zmRows.nonEmpty) {
-            val nlo = zmRows.map(_.getLong(4)).min
-            val nhi = zmRows.map(_.getLong(5)).max
+            val nlo = zmRows.map(_.getAs[Long]("__nlo")).min
+            val nhi = zmRows.map(_.getAs[Long]("__nhi")).max
             require(nlo >= -DoubleExactBound && nhi <= DoubleExactBound,
               "ensureBtree: BIGINT keys beyond ±2^53 alias in the btree's " +
                 s"double zonemap/residual (got [$nlo, $nhi]) " +
@@ -398,7 +398,7 @@ object ScalarIndex {
     * highest bucket; rows in boundary gaps go to the next bucket up —
     * either way the appended zonemap DELTA records the true min/max, so
     * pruning stays conservative and exact). Same crash discipline as
-    * [[AnnIndex.appendIvf]]: build with a `partial:` fingerprint, and this
+    * [[AnnIndex.append]]: build with a `partial:` fingerprint, and this
     * re-stamps `newFingerprint` only AFTER the appends commit. */
   def appendBtree(delta: DataFrame, idCol: String, keyCol: String,
       location: String, newFingerprint: String): Unit = {
@@ -1227,9 +1227,11 @@ object ScalarIndex {
   /** SOURCE files that may hold rows with `key ∈ values`, from the
     * bitmap's distinct (value, file) filestats. The value filter runs
     * DISTRIBUTED (the pair set can be cardinality × files large — never
-    * collected whole); only the matching file names come back. None
-    * under the same decline conditions as [[btreeCandidateFiles]], plus
-    * empty-string asks (bitmapRows never indexes them). */
+    * collected whole); one (file, matches) row per source file comes
+    * back, which gives both the matching names and the total file count
+    * of the receipt. None under the same decline conditions as
+    * [[btreeCandidateFiles]], plus empty-string asks (bitmapRows never
+    * indexes them). */
   def bitmapCandidateFiles(spark: SparkSession, location: String,
       values: Seq[String]): Option[FileCandidates] = {
     if (values.isEmpty || values.exists(v => v == null || v.isEmpty) ||

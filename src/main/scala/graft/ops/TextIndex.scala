@@ -163,7 +163,7 @@ object TextIndex {
     * postings into the bucketed layout, its doclens, and ONE new stats
     * delta row — history is never rewritten; searches sum the deltas.
     * df(t) needs no maintenance at all (it is the live row count of the
-    * term's postings). Same crash discipline as [[AnnIndex.appendIvf]]:
+    * term's postings). Same crash discipline as [[AnnIndex.append]]:
     * the caller builds with a `partial:` fingerprint and this re-stamps
     * `newFingerprint` only AFTER the appends commit. */
   def appendInverted(delta: DataFrame, idCol: String, textCol: String,

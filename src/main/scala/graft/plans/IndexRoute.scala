@@ -391,8 +391,8 @@ case class IndexedScanRewrite(spark: SparkSession)
       } yield rewritten).orElse(for {
         (cond, lr) <- filteredRelationOf(child)
         path <- sourcePathOf(lr)
-        rewritten <- tryRewriteAnnTopKFiltered(
-          gl.output, k, orders, cond, lr, path)
+        rewritten <- tryRewriteAnnTopK(
+          gl.output, k, orders, Some(cond), lr, path)
       } yield rewritten).getOrElse(gl)
     // `SELECT id FROM t ORDER BY cosine(vec, <lit>) DESC LIMIT k` — the
     // id projection sits ABOVE the limit (the sort references the vector
@@ -400,14 +400,9 @@ case class IndexedScanRewrite(spark: SparkSession)
     case p @ Project(projList, GlobalLimit(IntegerLiteral(k),
         LocalLimit(_, Sort(orders, true, child, _)))) =>
       (for {
-        lr <- relationOf(child)
+        (cond, lr) <- annRelationOf(child)
         path <- sourcePathOf(lr)
-        rewritten <- tryRewriteAnnTopK(projList, k, orders, lr, path)
-      } yield rewritten).orElse(for {
-        (cond, lr) <- filteredRelationOf(child)
-        path <- sourcePathOf(lr)
-        rewritten <- tryRewriteAnnTopKFiltered(
-          projList, k, orders, cond, lr, path)
+        rewritten <- tryRewriteAnnTopK(projList, k, orders, cond, lr, path)
       } yield rewritten).getOrElse(p)
     // ... and the same query AFTER the optimizer pushed the projection
     // BELOW the limits (PushProjectionThroughLimit runs in the same
@@ -416,23 +411,18 @@ case class IndexedScanRewrite(spark: SparkSession)
     case gl @ GlobalLimit(IntegerLiteral(k),
         LocalLimit(_, Project(projList, Sort(orders, true, child, _)))) =>
       (for {
-        lr <- relationOf(child)
+        (cond, lr) <- annRelationOf(child)
         path <- sourcePathOf(lr)
-        rewritten <- tryRewriteAnnTopK(projList, k, orders, lr, path)
-          .orElse(tryRewriteTopK(projList.collect {
+        rewritten <- tryRewriteAnnTopK(projList, k, orders, cond, lr, path)
+          .orElse(if (cond.nonEmpty) None else tryRewriteTopK(projList.collect {
             case ar: AttributeReference => ar
           }, k, orders, lr, path)
             .filter(_ => projList.forall(_.isInstanceOf[AttributeReference])))
-      } yield rewritten).orElse(for {
-        (cond, lr) <- filteredRelationOf(child)
-        path <- sourcePathOf(lr)
-        rewritten <- tryRewriteAnnTopKFiltered(
-          projList, k, orders, cond, lr, path)
       } yield rewritten).getOrElse(gl)
   }
 
   /** The scan beneath a FILTER beneath the sort — the filtered-ANN
-    * top-k shape ([[tryRewriteAnnTopKFiltered]]). Looks through a
+    * top-k shape ([[tryRewriteAnnTopK]]). Looks through a
     * column-pruning Project on either side of the Filter. */
   private def filteredRelationOf(plan: LogicalPlan)
       : Option[(Expression, LogicalPlan)] = plan match {
@@ -442,6 +432,13 @@ case class IndexedScanRewrite(spark: SparkSession)
       relationOf(rel).map((cond, _))
     case _ => None
   }
+
+  /** The scan beneath the sort of an ANN top-k, with the filter between
+    * them if there is one ([[relationOf]] or [[filteredRelationOf]]). */
+  private def annRelationOf(plan: LogicalPlan)
+      : Option[(Option[Expression], LogicalPlan)] =
+    relationOf(plan).map(lr => (Option.empty[Expression], lr))
+      .orElse(filteredRelationOf(plan).map { case (c, lr) => (Some(c), lr) })
 
   /** The scan beneath the filter, looking through a column-pruning
     * Project of bare attributes the optimizer may have pushed in.
@@ -1034,19 +1031,29 @@ case class IndexedScanRewrite(spark: SparkSession)
     Project(rewired, newPlan)
   }
 
-  /** `ORDER BY cosine(vec, <literal qvec>) DESC LIMIT k`, id-only
-    * projection, over an [[IndexRoute.registerAnnApprox]]-routed source →
-    * the persisted IVF-family search (probe → partition-pruned postings →
-    * top-k), spliced where a corpus-wide cosine TakeOrdered stood. Fires
-    * ONLY on the loudly-consented approximate route (see the
-    * registration's contract note); the projection must reference
-    * nothing but the id (scores are the index's 6-dp-rounded
+  /** `[WHERE <pred>] ORDER BY cosine(vec, <literal qvec>) DESC LIMIT k`,
+    * id-only projection, over an [[IndexRoute.registerAnnApprox]]-routed
+    * source → [[AnnIndex.search]] on the route's index (any IVF tier,
+    * read from its manifest), spliced where a corpus-wide cosine
+    * TakeOrdered stood. Fires ONLY on the loudly-consented approximate
+    * route (see the registration's contract note); the projection must
+    * reference nothing but the id (scores are the index's 6-dp-rounded
     * approximation and are not offered), the sort must be the single
     * `cosine DESC` with default NullsLast, and the usual freshness/
-    * divergence/tombstone guards decline as everywhere. */
+    * divergence/tombstone guards decline as everywhere.
+    *
+    * With a filter `cond`, the ORIGINAL filter subtree is spliced
+    * verbatim as the search's `allowed` id set, so ANY predicate the scan
+    * could evaluate works — and if the filter column itself has a
+    * covering scalar route, the NEXT fixed-point pass serves the allowed
+    * set from THAT index too: index intersection by rule composition,
+    * corpus fully closed. The search's measured-cardinality split then
+    * decides the arm: a selective predicate takes the exact path (recall
+    * 1.0 by construction — what q207/q231 hash-pin), a broad one keeps
+    * the probe with the semi-join beneath every scoring stage. */
   private def tryRewriteAnnTopK(projList: Seq[NamedExpression], k: Int,
-      orders: Seq[SortOrder], lr: LogicalPlan, path: String)
-      : Option[LogicalPlan] = for {
+      orders: Seq[SortOrder], cond: Option[Expression], lr: LogicalPlan,
+      path: String): Option[LogicalPlan] = for {
     (vecAttr, qvec) <- orders match {
       case Seq(SortOrder(graft.functions.CosineSimilarity(
           a: AttributeReference, Literal(v, ArrayType(FloatType, _))),
@@ -1070,18 +1077,14 @@ case class IndexedScanRewrite(spark: SparkSession)
     if !AnnIndex.hasTombstones(route.location)
   } yield {
     import spark.implicits._
+    val allowed = cond.map(c => org.apache.spark.sql.graft.PlanBridge.ofRows(
+      spark, Project(Seq(idAttr), Filter(c, lr))))
     // qid -1 cannot collide with a corpus id — the search's
     // self-exclusion keeps every vector eligible (the TVF convention)
     val queries = Seq((-1L, qvec)).toDF("qid", "qvec")
-    val res = route.indexType match {
-      case "ivf" => AnnIndex.searchIvf(
-        spark, route.location, queries, "qid", "qvec", k, route.nprobe)
-      case "ivf_pq" => AnnIndex.searchIvfPq(
-        spark, route.location, queries, "qid", "qvec", k, route.nprobe)
-      case _ => AnnIndex.searchIvfSq(
-        spark, route.location, queries, "qid", "qvec", k, route.nprobe)
-    }
-    val df = res.orderBy(col("rank"))
+    val df = AnnIndex.search(spark, route.location, queries, "qid", "qvec",
+        k, route.nprobe, allowed = allowed)
+      .orderBy(col("rank"))
       .select(col("vec_id").as(route.idCol))
     // the search plan broadcasts its probe/centroid/tombstone sides via
     // broadcast() hints; a subtree spliced AFTER the optimizer's
@@ -1112,80 +1115,6 @@ case class IndexedScanRewrite(spark: SparkSession)
   private def arrayFloats(v: Any): Seq[Float] =
     v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
       .toFloatArray().toSeq
-
-  /** FILTERED vector search from plain SQL — `WHERE <pred> ORDER BY
-    * cosine(vec, <literal>) DESC LIMIT k`, id-only projection, over an
-    * [[IndexRoute.registerAnnApprox]]-routed source → the family's
-    * `searchIvf*Filtered` plan: the allowed-id set is the ORIGINAL
-    * filter subtree (spliced verbatim, so ANY predicate the scan could
-    * evaluate works — and if the filter column itself has a covering
-    * scalar route, the NEXT fixed-point pass serves the allowed set from
-    * THAT index too: index intersection by rule composition, corpus
-    * fully closed). The engine's measured-cardinality split then decides
-    * the arm: a selective predicate takes the exact path (recall 1.0 by
-    * construction — what q207/q231 hash-pin), a broad one keeps the
-    * probe with the semi-join beneath both scoring stages. Same
-    * approximation consent and freshness/divergence guards as the
-    * unfiltered ANN route. */
-  private def tryRewriteAnnTopKFiltered(projList: Seq[NamedExpression],
-      k: Int, orders: Seq[SortOrder], cond: Expression,
-      lr: LogicalPlan, path: String): Option[LogicalPlan] = for {
-    (vecAttr, qvec) <- orders match {
-      case Seq(SortOrder(graft.functions.CosineSimilarity(
-          a: AttributeReference, Literal(v, ArrayType(FloatType, _))),
-          Descending, NullsLast, _)) if v != null =>
-        Some((a, arrayFloats(v)))
-      case Seq(SortOrder(graft.functions.CosineSimilarity(
-          Literal(v, ArrayType(FloatType, _)), a: AttributeReference),
-          Descending, NullsLast, _)) if v != null =>
-        Some((a, arrayFloats(v)))
-      case _ => None
-    }
-    if k > 0
-    route <- IndexRoute.lookupType(path, vecAttr.name,
-      "ivf", "ivf_pq", "ivf_sq")
-    idAttr <- lr.output.find(_.name == route.idCol)
-    if idAttr.dataType == LongType
-    if projList.forall(_.references.subsetOf(AttributeSet(Seq(idAttr))))
-    man <- AnnIndex.readManifest(route.location)
-    if man.fingerprint == AnnIndex.sourceFingerprint(route.rawSourcePath)
-    if !man.divergent
-    if !AnnIndex.hasTombstones(route.location)
-  } yield {
-    import spark.implicits._
-    val allowed = org.apache.spark.sql.graft.PlanBridge.ofRows(
-      spark, Project(Seq(idAttr), Filter(cond, lr)))
-    val queries = Seq((-1L, qvec)).toDF("qid", "qvec")
-    val res = route.indexType match {
-      case "ivf" => AnnIndex.searchIvfFiltered(spark, route.location,
-        allowed, route.idCol, queries, "qid", "qvec", k, route.nprobe)
-      case "ivf_pq" => AnnIndex.searchIvfPqFiltered(spark, route.location,
-        allowed, route.idCol, queries, "qid", "qvec", k, route.nprobe)
-      case _ => AnnIndex.searchIvfSqFiltered(spark, route.location,
-        allowed, route.idCol, queries, "qid", "qvec", k, route.nprobe)
-    }
-    val df = res.orderBy(col("rank"))
-      .select(col("vec_id").as(route.idCol))
-    val newPlan = org.apache.spark.sql.catalyst.optimizer
-      .EliminateResolvedHint(df.queryExecution.analyzed)
-    val newId = newPlan.output.head
-    require(newId.dataType == idAttr.dataType,
-      s"ann route ${route.location} id type drifted from the source")
-    val rewired = projList.map {
-      case ar: AttributeReference =>
-        Alias(newId, ar.name)(exprId = ar.exprId, qualifier = ar.qualifier)
-      case ne =>
-        val t = ne.transform {
-          case ar: AttributeReference if ar.exprId == idAttr.exprId => newId
-        }.asInstanceOf[NamedExpression]
-        t match {
-          case a: Alias =>
-            Alias(a.child, a.name)(exprId = ne.exprId, qualifier = a.qualifier)
-          case other => other
-        }
-    }
-    Project(rewired, newPlan)
-  }
 
   /** `contains(text, 'needle')` / `text LIKE '%needle%'` over a routed
     * NGRAM source → the index's two-phase plan: gram-intersection

@@ -330,7 +330,7 @@ object SimilarityQueries {
     * bits inline (q127's md5-parity device) and replays the per-cell
     * pair join + connected components (q93's recursive-CTE device), so
     * the shape that scales is itself hash-gated rather than only
-    * soak-measured (`ScaleSoak` SOAK_PRODSHAPE). Output: per label, the
+    * measured at scale. Output: per label, the
     * surviving cell count and survivor summary. */
   def q184SemdedupCells(s: SparkSession, d: String): DataFrame = {
     val srp = Similarity.srpPlaneWeights(planes = 7, dims = 64)
@@ -1264,7 +1264,7 @@ object SimilarityQueries {
 
   /** q200: the INCREMENTAL-INGEST path of the persisted IVF index — build
     * on the even half of the corpus (stamping a `partial:` fingerprint),
-    * [[graft.ops.AnnIndex.appendIvf]] the odd half against the frozen
+    * [[graft.ops.AnnIndex.append]] the odd half against the frozen
     * centroids (re-stamping the full fingerprint only after the append
     * commits), then search. Assignment is per-vector independent, so
     * build+append must be INDISTINGUISHABLE from the one-shot build: the
@@ -1283,7 +1283,7 @@ object SimilarityQueries {
       AnnIndex.ensureIvf(emb.filter(col("vec_id") % 2 === 0),
         "vec_id", "embedding", cells, "cid", "cvec", loc, src,
         fingerprintOverride = Some(s"partial:$fpFull"))
-      AnnIndex.appendIvf(emb.filter(col("vec_id") % 2 === 1),
+      AnnIndex.append(emb.filter(col("vec_id") % 2 === 1),
         "vec_id", "embedding", loc, newFingerprint = fpFull)
     }
     AnnIndex.searchIvf(s, loc,
@@ -1312,7 +1312,7 @@ object SimilarityQueries {
       AnnIndex.ensureIvfPq(emb.filter(col("vec_id") % 2 === 0),
         "vec_id", "embedding", cells, "cid", "cvec", codebook, m = M,
         loc, src, fingerprintOverride = Some(s"partial:$fpFull"))
-      AnnIndex.appendIvfPq(emb.filter(col("vec_id") % 2 === 1),
+      AnnIndex.append(emb.filter(col("vec_id") % 2 === 1),
         "vec_id", "embedding", loc, newFingerprint = fpFull)
     }
     AnnIndex.searchIvfPq(s, loc,
@@ -1402,7 +1402,7 @@ object SimilarityQueries {
   /** q206: FILTERED vector search, the BROAD arm — top-k among only the
     * vectors whose metadata passes `label >= 2` (~80% of the corpus).
     * The predicate is evaluated on the base table (the index stores no
-    * metadata) and [[graft.ops.AnnIndex.searchIvfFiltered]] keeps the
+    * metadata) and [[graft.ops.AnnIndex.search]] with `allowed` keeps the
     * IVF probe, pushing the allowed-id semi-join BENEATH the distance
     * computation — a post-filter above the top-k would return fewer
     * than k rows whenever filtered-out vectors crowd the shortlist.
@@ -1416,11 +1416,12 @@ object SimilarityQueries {
       emb.filter(col("vec_id") < 10)
         .select(col("vec_id").cast("int").as("cid"), col("embedding").as("cvec")),
       "cid", "cvec", loc, s"$d/embeddings.parquet")
-    AnnIndex.searchIvfFiltered(s, loc,
-      emb.filter(col("label") >= 2).select(col("vec_id")), "vec_id",
+    AnnIndex.search(s, loc,
       emb.filter(col("vec_id") >= 100 && col("vec_id") < 103)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec")),
-      "qid", "qvec", k = 10, nprobe = 3, exactCap = 50)
+      "qid", "qvec", k = 10, nprobe = 3,
+      allowed = Some(emb.filter(col("label") >= 2).select(col("vec_id"))),
+      exactCap = 50)
       .orderBy(col("qid"), col("rank"))
   }
 
@@ -1438,12 +1439,13 @@ object SimilarityQueries {
       emb.filter(col("vec_id") < 10)
         .select(col("vec_id").cast("int").as("cid"), col("embedding").as("cvec")),
       "cid", "cvec", loc, s"$d/embeddings.parquet")
-    AnnIndex.searchIvfFiltered(s, loc,
-      emb.filter(col("label") === 5 && col("vec_id") % 2 === 0)
-        .select(col("vec_id")), "vec_id",
+    AnnIndex.search(s, loc,
       emb.filter(col("vec_id") >= 100 && col("vec_id") < 103)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec")),
-      "qid", "qvec", k = 10, nprobe = 3, exactCap = 2000)
+      "qid", "qvec", k = 10, nprobe = 3,
+      allowed = Some(emb.filter(col("label") === 5 && col("vec_id") % 2 === 0)
+        .select(col("vec_id"))),
+      exactCap = 2000)
       .orderBy(col("qid"), col("rank"))
   }
 
@@ -1474,11 +1476,12 @@ object SimilarityQueries {
       graft.ops.ProductQuantization.seedCodebook(
         emb, "vec_id", "embedding", m = M, k = CodebookK),
       m = M, loc, s"$d/embeddings.parquet")
-    AnnIndex.searchIvfPqFiltered(s, loc,
-      emb.filter(col("label") >= 2).select(col("vec_id")), "vec_id",
+    AnnIndex.search(s, loc,
       emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec")),
-      "qid", "qvec", k = 10, nprobe = 3, rerank = 100, exactCap = 50)
+      "qid", "qvec", k = 10, nprobe = 3, rerank = 100,
+      allowed = Some(emb.filter(col("label") >= 2).select(col("vec_id"))),
+      exactCap = 50)
       .orderBy(col("qid"), col("rank"))
   }
 
@@ -1558,7 +1561,7 @@ object SimilarityQueries {
         "vec_id", "embedding", cells, "cid", "cvec",
         graft.ops.ScalarQuant.trainRanges(emb, "embedding"),
         loc, src, fingerprintOverride = Some(s"partial:$fpFull"))
-      AnnIndex.appendIvfSq(emb.filter(col("vec_id") % 2 === 1),
+      AnnIndex.append(emb.filter(col("vec_id") % 2 === 1),
         "vec_id", "embedding", loc, newFingerprint = fpFull)
     }
     AnnIndex.searchIvfSq(s, loc,
@@ -1612,11 +1615,12 @@ object SimilarityQueries {
   def q230FilteredIvfSq(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
     val loc = ensureIvfSqDeleted(s, d)
-    AnnIndex.searchIvfSqFiltered(s, loc,
-      emb.filter(col("label") >= 2).select(col("vec_id")), "vec_id",
+    AnnIndex.search(s, loc,
       emb.filter(col("vec_id") >= 100 && col("vec_id") < 103)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec")),
-      "qid", "qvec", k = 10, nprobe = 3, rerank = 50, exactCap = 50)
+      "qid", "qvec", k = 10, nprobe = 3, rerank = 50,
+      allowed = Some(emb.filter(col("label") >= 2).select(col("vec_id"))),
+      exactCap = 50)
       .orderBy(col("qid"), col("rank"))
   }
 
@@ -1629,12 +1633,13 @@ object SimilarityQueries {
   def q231FilteredIvfSqExact(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
     val loc = ensureIvfSqDeleted(s, d)
-    AnnIndex.searchIvfSqFiltered(s, loc,
-      emb.filter(col("label") === 5 && col("vec_id") % 2 === 0)
-        .select(col("vec_id")), "vec_id",
+    AnnIndex.search(s, loc,
       emb.filter(col("vec_id") >= 100 && col("vec_id") < 103)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec")),
-      "qid", "qvec", k = 10, nprobe = 3, rerank = 50, exactCap = 2000)
+      "qid", "qvec", k = 10, nprobe = 3, rerank = 50,
+      allowed = Some(emb.filter(col("label") === 5 && col("vec_id") % 2 === 0)
+        .select(col("vec_id"))),
+      exactCap = 2000)
       .orderBy(col("qid"), col("rank"))
   }
 
@@ -1721,7 +1726,7 @@ object SimilarityQueries {
   /** q248: FILTERED vector search from PLAIN SQL — `WHERE label = 5 AND
     * vec_id % 2 = 0 ORDER BY cosine DESC LIMIT 10` over the approximate
     * route: the rewrite splices the ORIGINAL filter subtree as the
-    * allowed-id set and [[graft.ops.AnnIndex.searchIvfFiltered]]'s
+    * allowed-id set and [[graft.ops.AnnIndex.search]]'s
     * measured-cardinality split picks the arm — selective here, so the
     * EXACT path runs and the oracle is q207's TRUE independent filtered
     * brute force (single query vector, no self-exclusion: the route's

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.{AnnIndex, ProductQuantization, Similarity}
@@ -81,19 +82,43 @@ class AnnIndexSpec extends SparkSpec {
     assert(res.nonEmpty)
   }
 
-  test("postings scan is partition-pruned to the probed cells") {
-    val loc = tmpLoc("ivf-prune")
+  /** One index per IVF tier over the whole corpus, built once for the
+    * specs that compare tiers or exercise a tier-independent path. */
+  private lazy val tierLocs: Map[String, String] = {
+    val locs = Map("ivf" -> tmpLoc("tier-ivf"), "ivf_pq" -> tmpLoc("tier-pq"),
+      "ivf_sq" -> tmpLoc("tier-sq"))
     AnnIndex.ensureIvf(emb, "vec_id", "embedding",
-      seededCells, "cid", "cvec", loc, source)
-    val df = AnnIndex.searchIvf(spark, loc, queries, "qid", "qvec",
-      k = 10, nprobe = 3)
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"), plan)
-    val pruned = plan.linesIterator
-      .filter(_.contains("PartitionFilters"))
-      .exists(l => l.contains("cid") && l.contains(" IN "))
-    assert(pruned, s"expected a static cid IN (...) partition filter:\n$plan")
+      seededCells, "cid", "cvec", locs("ivf"), source)
+    AnnIndex.ensureIvfPq(emb, "vec_id", "embedding", seededCells, "cid",
+      "cvec", ProductQuantization.seedCodebook(emb, "vec_id", "embedding",
+        m = 8, k = 16), m = 8, locs("ivf_pq"), source)
+    AnnIndex.ensureIvfSq(emb, "vec_id", "embedding", seededCells, "cid",
+      "cvec", sqRanges, locs("ivf_sq"), source)
+    locs
+  }
+
+  /** The tier-named search over [[tierLocs]]`(tier)`, k = 10, nprobe = 3. */
+  private def tierSearch(tier: String, qs: DataFrame = queries) = tier match {
+    case "ivf" => AnnIndex.searchIvf(spark, tierLocs(tier), qs,
+      "qid", "qvec", k = 10, nprobe = 3)
+    case "ivf_pq" => AnnIndex.searchIvfPq(spark, tierLocs(tier), qs,
+      "qid", "qvec", k = 10, nprobe = 3)
+    case _ => AnnIndex.searchIvfSq(spark, tierLocs(tier), qs,
+      "qid", "qvec", k = 10, nprobe = 3)
+  }
+
+  test("postings scan is partition-pruned to the probed cells") {
+    for (tier <- Seq("ivf", "ivf_pq", "ivf_sq")) {
+      val df = tierSearch(tier)
+      df.collect()
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters"), s"$tier:\n$plan")
+      val pruned = plan.linesIterator
+        .filter(_.contains("PartitionFilters"))
+        .exists(l => l.contains("cid") && l.contains(" IN "))
+      assert(pruned,
+        s"$tier: expected a static cid IN (...) partition filter:\n$plan")
+    }
   }
 
   test("incremental append: build-half + append-half ≡ one-shot build, " +
@@ -108,7 +133,7 @@ class AnnIndexSpec extends SparkSpec {
       fingerprintOverride = Some("partial:xyz"))
     // mid-flow the manifest must NOT read as the complete index
     assert(AnnIndex.readManifest(locInc).get.fingerprint == "partial:xyz")
-    AnnIndex.appendIvf(emb.filter(col("vec_id") % 2 === 1),
+    AnnIndex.append(emb.filter(col("vec_id") % 2 === 1),
       "vec_id", "embedding", locInc, newFingerprint = "full:xyz")
     assert(AnnIndex.readManifest(locInc).get.fingerprint == "full:xyz")
 
@@ -145,7 +170,7 @@ class AnnIndexSpec extends SparkSpec {
     AnnIndex.ensureIvfPq(emb.filter(col("vec_id") % 2 === 0),
       "vec_id", "embedding", seededCells, "cid", "cvec", codebook, m = 8,
       locInc, source, fingerprintOverride = Some("partial:xyz"))
-    AnnIndex.appendIvfPq(emb.filter(col("vec_id") % 2 === 1),
+    AnnIndex.append(emb.filter(col("vec_id") % 2 === 1),
       "vec_id", "embedding", locInc, newFingerprint = "full:xyz")
     val oneShot = AnnIndex.searchIvfPq(spark, locFull, pqQueries,
       "qid", "qvec", k = 10, nprobe = 3, rerank = 100)
@@ -163,7 +188,7 @@ class AnnIndexSpec extends SparkSpec {
     AnnIndex.ensureIvf(emb.filter(col("vec_id") % 2 === 0),
       "vec_id", "embedding", seededCells, "cid", "cvec", loc, source,
       fingerprintOverride = Some("partial:c"))
-    AnnIndex.appendIvf(emb.filter(col("vec_id") % 2 === 1),
+    AnnIndex.append(emb.filter(col("vec_id") % 2 === 1),
       "vec_id", "embedding", loc, newFingerprint = "full:c")
     def parquetFiles: Int = {
       def walk(f: java.io.File): Seq[java.io.File] =
@@ -311,7 +336,7 @@ class AnnIndexSpec extends SparkSpec {
           val delta = b.filter(col("op") === "add")
             .select(col("vec_id"), col("embedding"))
           if (delta.limit(1).count() > 0)
-            AnnIndex.appendIvf(delta, "vec_id", "embedding", loc,
+            AnnIndex.append(delta, "vec_id", "embedding", loc,
               newFingerprint = "cdc:base")
           val dels = b.filter(col("op") === "del").select(col("vec_id"))
           if (dels.limit(1).count() > 0)
@@ -425,9 +450,10 @@ class AnnIndexSpec extends SparkSpec {
     AnnIndex.ensureIvf(emb, "vec_id", "embedding",
       seededCells, "cid", "cvec", loc, source)
     val pred = col("label") === 5 && col("vec_id") % 2 === 0
-    val got = AnnIndex.searchIvfFiltered(spark, loc,
-      emb.filter(pred).select(col("vec_id")), "vec_id",
-      queries, "qid", "qvec", k = 10, nprobe = 3, exactCap = 1000000L)
+    val got = AnnIndex.search(spark, loc, queries, "qid", "qvec",
+      k = 10, nprobe = 3,
+      allowed = Some(emb.filter(pred).select(col("vec_id"))),
+      exactCap = 1000000L)
       .orderBy("qid", "rank").collect()
     val want = Similarity.bruteForceTopK(emb.filter(pred),
       "vec_id", "embedding", queries, "qid", "qvec", k = 10)
@@ -444,9 +470,9 @@ class AnnIndexSpec extends SparkSpec {
       seededCells, "cid", "cvec", loc, source)
     val pred = col("label") >= 2
     // exactCap = 0 forces the IVF arm regardless of the filter's size
-    val got = AnnIndex.searchIvfFiltered(spark, loc,
-      emb.filter(pred).select(col("vec_id")), "vec_id",
-      queries, "qid", "qvec", k = 10, nprobe = 3, exactCap = 0L)
+    val got = AnnIndex.search(spark, loc, queries, "qid", "qvec",
+      k = 10, nprobe = 3,
+      allowed = Some(emb.filter(pred).select(col("vec_id"))), exactCap = 0L)
       .orderBy("qid", "rank").collect()
     val want = Similarity.ivfTopK(emb.filter(pred), "vec_id", "embedding",
       queries, "qid", "qvec", seededCells, "cid", "cvec",
@@ -478,15 +504,15 @@ class AnnIndexSpec extends SparkSpec {
       seededCells, "cid", "cvec", loc, source)
     val pred = col("label") >= 2
     // delete an id that the unfiltered broad search retrieves at rank 1
-    val first = AnnIndex.searchIvfFiltered(spark, loc,
-      emb.filter(pred).select(col("vec_id")), "vec_id",
-      queries, "qid", "qvec", k = 1, nprobe = 3, exactCap = 0L)
+    val first = AnnIndex.search(spark, loc, queries, "qid", "qvec",
+      k = 1, nprobe = 3,
+      allowed = Some(emb.filter(pred).select(col("vec_id"))), exactCap = 0L)
       .collect().head.getLong(2)
     AnnIndex.deleteIds(emb.filter(col("vec_id") === first), "vec_id", loc)
     for (cap <- Seq(0L, 1000000L)) {
-      val got = AnnIndex.searchIvfFiltered(spark, loc,
-        emb.filter(pred).select(col("vec_id")), "vec_id",
-        queries, "qid", "qvec", k = 10, nprobe = 3, exactCap = cap)
+      val got = AnnIndex.search(spark, loc, queries, "qid", "qvec",
+        k = 10, nprobe = 3,
+        allowed = Some(emb.filter(pred).select(col("vec_id"))), exactCap = cap)
         .collect()
       assert(got.nonEmpty)
       assert(!got.exists(_.getLong(2) == first),
@@ -504,10 +530,10 @@ class AnnIndexSpec extends SparkSpec {
     AnnIndex.ensureIvfPq(emb, "vec_id", "embedding",
       seededCells, "cid", "cvec", codebook, m = 8, loc, source)
     val broad = col("label") >= 2
-    val gotBroad = AnnIndex.searchIvfPqFiltered(spark, loc,
-      emb.filter(broad).select(col("vec_id")), "vec_id",
-      pqQueries, "qid", "qvec", k = 10, nprobe = 3, rerank = 100,
-      exactCap = 0L).orderBy("qid", "rank").collect()
+    val gotBroad = AnnIndex.search(spark, loc, pqQueries, "qid", "qvec",
+      k = 10, nprobe = 3, rerank = 100,
+      allowed = Some(emb.filter(broad).select(col("vec_id"))), exactCap = 0L)
+      .orderBy("qid", "rank").collect()
     val wantBroad = ProductQuantization.searchIvfPq(
       emb.filter(broad), "vec_id", "embedding",
       pqQueries, "qid", "qvec", seededCells, "cid", "cvec",
@@ -516,10 +542,11 @@ class AnnIndexSpec extends SparkSpec {
     assert(gotBroad.nonEmpty)
     assert(gotBroad.toSeq == wantBroad.toSeq)
     val narrow = col("label") === 5 && col("vec_id") % 2 === 0
-    val gotNarrow = AnnIndex.searchIvfPqFiltered(spark, loc,
-      emb.filter(narrow).select(col("vec_id")), "vec_id",
-      pqQueries, "qid", "qvec", k = 10, nprobe = 3, rerank = 100,
-      exactCap = 1000000L).orderBy("qid", "rank").collect()
+    val gotNarrow = AnnIndex.search(spark, loc, pqQueries, "qid", "qvec",
+      k = 10, nprobe = 3, rerank = 100,
+      allowed = Some(emb.filter(narrow).select(col("vec_id"))),
+      exactCap = 1000000L)
+      .orderBy("qid", "rank").collect()
     val wantNarrow = Similarity.bruteForceTopK(emb.filter(narrow),
       "vec_id", "embedding", pqQueries, "qid", "qvec", k = 10)
       .orderBy("qid", "rank").collect()
@@ -585,7 +612,7 @@ class AnnIndexSpec extends SparkSpec {
     AnnIndex.ensureIvfSq(emb.filter(col("vec_id") % 2 === 0),
       "vec_id", "embedding", seededCells, "cid", "cvec", sqRanges,
       locTwo, source, fingerprintOverride = Some(s"partial:$fp"))
-    AnnIndex.appendIvfSq(emb.filter(col("vec_id") % 2 === 1),
+    AnnIndex.append(emb.filter(col("vec_id") % 2 === 1),
       "vec_id", "embedding", locTwo, newFingerprint = fp)
     assert(AnnIndex.readManifest(locTwo).exists(_.fingerprint == fp),
       "append must re-stamp the full fingerprint")
@@ -627,5 +654,73 @@ class AnnIndexSpec extends SparkSpec {
       seededCells, "cid", "cvec", sqRanges, loc, source))
     assert(AnnIndex.ensureIvfSq(emb, "vec_id", "embedding",
       seededCells, "cid", "cvec", sqRanges, loc, s"$sfDir/nation.parquet"))
+  }
+
+  test("filtered IVF-SQ8 search: selective arm ≡ brute force over the " +
+      "allowed ids; broad arm over every id ≡ the unfiltered search") {
+    val loc = tierLocs("ivf_sq")
+    val narrow = col("label") === 5 && col("vec_id") % 2 === 0
+    val gotNarrow = AnnIndex.search(spark, loc, queries, "qid", "qvec",
+      k = 10, nprobe = 3, rerank = 50,
+      allowed = Some(emb.filter(narrow).select(col("vec_id"))),
+      exactCap = 1000000L)
+      .orderBy("qid", "rank").collect()
+    val wantNarrow = Similarity.bruteForceTopK(emb.filter(narrow),
+      "vec_id", "embedding", queries, "qid", "qvec", k = 10)
+      .orderBy("qid", "rank").collect()
+    assert(gotNarrow.nonEmpty)
+    assert(gotNarrow.toSeq == wantNarrow.toSeq)
+    // exactCap = 0 forces the probe arm; every id allowed ≡ no filter
+    val gotAll = AnnIndex.search(spark, loc, queries, "qid", "qvec",
+      k = 10, nprobe = 3, rerank = 50,
+      allowed = Some(emb.select(col("vec_id"))), exactCap = 0L)
+      .orderBy("qid", "rank").collect()
+    val unfiltered = tierSearch("ivf_sq").orderBy("qid", "rank").collect()
+    assert(gotAll.nonEmpty)
+    assert(gotAll.toSeq == unfiltered.toSeq)
+  }
+
+  test("filtered search, selective arm: flat, PQ and SQ8 indexes over one " +
+      "corpus return identical rows (the exact arm never reads codes)") {
+    val allowed = emb.filter(col("label") === 5 && col("vec_id") % 2 === 0)
+      .select(col("vec_id"))
+    val Seq(flat, pq, sq) = Seq("ivf", "ivf_pq", "ivf_sq").map(tier =>
+      AnnIndex.search(spark, tierLocs(tier), queries, "qid", "qvec",
+        k = 10, nprobe = 3, allowed = Some(allowed), exactCap = 1000000L)
+        .orderBy("qid", "rank").collect().toSeq)
+    assert(flat.nonEmpty)
+    assert(pq == flat)
+    assert(sq == flat)
+  }
+
+  test("a tier-named search refuses an index of another tier") {
+    intercept[IllegalArgumentException](AnnIndex.searchIvfPq(spark,
+      tierLocs("ivf"), queries, "qid", "qvec"))
+    intercept[IllegalArgumentException](AnnIndex.searchIvfSq(spark,
+      tierLocs("ivf_pq"), queries, "qid", "qvec"))
+    intercept[IllegalArgumentException](AnnIndex.searchIvf(spark,
+      tierLocs("ivf_sq"), queries, "qid", "qvec"))
+  }
+
+  test("graft_ann_search serves every IVF tier with the tier's own search") {
+    val qv = emb.filter(col("vec_id") === 100).select(col("embedding"))
+      .head().getSeq[Float](0)
+    val qs = spark.createDataFrame(java.util.List.of(
+        org.apache.spark.sql.Row(-1L, qv)),
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "qid BIGINT, qvec ARRAY<FLOAT>"))
+    val vecLit = qv.map(f => s"CAST('$f' AS FLOAT)")
+      .mkString("array(", ", ", ")")
+    for (tier <- Seq("ivf", "ivf_pq", "ivf_sq")) {
+      val loc = tierLocs(tier)
+      val got = spark.sql(
+        s"SELECT * FROM graft_ann_search('$loc', $vecLit, 10, 3)")
+        .orderBy("rank").collect().map(r =>
+          (r.getAs[Int]("rank"), r.getAs[Long]("vec_id"), r.getAs[Double]("score")))
+      val want = tierSearch(tier, qs).orderBy("rank").collect().map(r =>
+        (r.getAs[Int]("rank"), r.getAs[Long]("vec_id"), r.getAs[Double]("score")))
+      assert(got.length == 10, s"$tier: ${got.length} rows")
+      assert(got.toSeq == want.toSeq, tier)
+    }
   }
 }

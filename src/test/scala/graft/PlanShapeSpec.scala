@@ -699,7 +699,7 @@ class PlanShapeSpec extends SparkSpec {
     // hazard carry their own mitigation (salting — q72; degree
     // orientation — triangles), and EVERYTHING ELSE leans on AQE's
     // runtime skew-join split. This receipt proves the lean is real: a
-    // join with one celebrity key (the ScaleSoak hub profile, scaled to
+    // join with one celebrity key (a hub-shaped profile, scaled to
     // test size) must come out of AQE with the skewed partition SPLIT —
     // visible as skew=true on the sort-merge join — not serialized
     // through one straggler task.
